@@ -7,10 +7,13 @@
 
     python -m swiftbulkuploader_spark.cli upload <manifest_path> <store_root>
            <attempts_path> [--cutoff C] [--parallelism N] [--max-attempts K]
+           [--segment-size BYTES]
         == `python bulkupload.py <container> <table> <N> [cutoff]`
-        (bulkupload.py:390-458): resume-filter, upload, append the attempt
-        log, print the report. `--parallelism` replaces the reference's
-        worker-process count (readme.md:39-42).
+        (bulkupload.py:390-458): `plans.upload.upload_manifest` —
+        resume-filter, upload, append the attempt log, print the summary.
+        `--parallelism` replaces the reference's worker-process count
+        (readme.md:39-42); `--segment-size` uploads files above it as
+        `key/part-NNNN` parts through the same retrying loop.
 
     python -m swiftbulkuploader_spark.cli status <manifest_path> <attempts_path>
         == the progress/report files (bulkupload.py:290-338): progress line,
@@ -71,41 +74,23 @@ def cmd_prepare(args) -> int:
 
 
 def cmd_upload(args) -> int:
-    from swiftbulkuploader_spark.plans.upload import report, upload, upload_segmented
+    from swiftbulkuploader_spark.plans.upload import upload_manifest
     from swiftbulkuploader_spark.streaming.progress import progress_line
 
     spark = _spark()
     manifest = spark.read.parquet(args.manifest_path).filter(F.col("error").isNull())
-    try:
-        prior = spark.read.parquet(args.attempts_path)
-    except Exception:  # noqa: BLE001 - first run
-        prior = None
-    if args.segment_size:
-        attempts = upload_segmented(
-            manifest,
-            _store_factory(args.store_root),
-            segment_size=args.segment_size,
-            cutoff=args.cutoff,
-            parallelism=args.parallelism,
-            prior_attempts=prior,  # per-part resume
-        )
-    else:
-        attempts = upload(
-            manifest,
-            _store_factory(args.store_root),
-            prior_attempts=prior,
-            cutoff=args.cutoff,
-            max_attempts=args.max_attempts,
-            parallelism=args.parallelism,
-        )
-    attempts.write.mode("append").parquet(args.attempts_path)
-    full = spark.read.parquet(args.attempts_path)
-    rep = {r["ok"]: r["n_files"] for r in report(full).collect()}
-    total = manifest.count()
-    done = rep.get(True, 0)
-    print(progress_line(done, total))
-    print(f"uploaded={done} failed={rep.get(False, 0)} total={total}")
-    return 0 if rep.get(False, 0) == 0 else 1
+    res = upload_manifest(
+        manifest,
+        _store_factory(args.store_root),
+        args.attempts_path,
+        cutoff=args.cutoff,
+        max_attempts=args.max_attempts,
+        parallelism=args.parallelism,
+        segment_size=args.segment_size,
+    )
+    print(progress_line(res["uploaded"], res["total"]))
+    print(f"uploaded={res['uploaded']} failed={res['failed']} total={res['total']}")
+    return 0 if res["failed"] == 0 else 1
 
 
 def cmd_recrawl(args) -> int:
@@ -129,35 +114,25 @@ def cmd_recrawl(args) -> int:
 
 def cmd_status(args) -> int:
     """Progress is derived from the CURRENT manifest joined to the attempt
-    log (apply_attempts), not from the raw log: successes for files since
-    removed from the manifest don't count, and a success older than a
-    file's mtime leaves it pending (same rule the next `upload` applies) —
-    status and upload always agree on the pending set."""
-    from swiftbulkuploader_spark.plans.upload import apply_attempts, latest_status
+    log (`summarize`), not from the raw log: successes for files since
+    removed from the manifest don't count, a file with a failed part is
+    not uploaded, and a success older than a file's mtime leaves it
+    pending (same rule the next `upload` applies) — status and upload
+    always agree on the pending set."""
+    from swiftbulkuploader_spark.plans.upload import summarize
     from swiftbulkuploader_spark.streaming.progress import progress_line, rate_over_window
+    from swiftbulkuploader_spark.streaming.state_io import read_state_or_none
 
     spark = _spark()
     manifest = spark.read.parquet(args.manifest_path).filter(F.col("error").isNull())
-    total = manifest.count()
-    try:
-        attempts = spark.read.parquet(args.attempts_path)
-    except Exception:  # noqa: BLE001
-        print(progress_line(0, total))
-        return 0
-    flagged = apply_attempts(manifest, attempts).cache()
-    done = flagged.filter("uploaded").count()
-    # failed is DISJOINT from uploaded: only not-uploaded files whose latest
-    # attempt failed (a success followed by a failed retry is still uploaded)
-    failed = (
-        flagged.filter(~F.col("uploaded"))
-        .select("id")
-        .join(latest_status(attempts).filter(~F.col("ok")).select("id"), "id", "left_semi")
-        .count()
-    )
-    print(progress_line(done, total))
-    print(f"uploaded={done} failed={failed} pending={total - done}")
-    for r in rate_over_window(attempts).orderBy("window_start").tail(5):
-        print(f"  {r['window_start']}  {r['n_ok']} ok  {r['rate_per_s']}/s")
+    attempts = read_state_or_none(spark, args.attempts_path)
+    res = summarize(manifest, attempts)
+    print(progress_line(res["uploaded"], res["total"]))
+    print(f"uploaded={res['uploaded']} failed={res['failed']} "
+          f"pending={res['total'] - res['uploaded']}")
+    if attempts is not None:
+        for r in rate_over_window(attempts).orderBy("window_start").tail(5):
+            print(f"  {r['window_start']}  {r['n_ok']} ok  {r['rate_per_s']}/s")
     return 0
 
 

@@ -1,26 +1,35 @@
-"""The upload stage: pending work -> object store -> attempt log
+"""The upload stage: manifest -> work units -> object store -> attempt log
 (SURVEY.md §3.2's Spark lifecycle replacement).
 
 The reference fans out N OS processes over a shared Manager list with a lock
 (bulkupload.py:407-440); here the *only* orchestration is a DataFrame plan:
 
-    pending  = manifest LEFT ANTI JOIN successes ON id          (Q7 resume)
-    attempts = pending mapInPandas upload_batch                 (S6 sink)
-    report   = attempts groupBy(ok)                             (A9)
+    units    = manifest explode(sequence(0, n_parts - 1))           (S11)
+    pending  = units LEFT ANTI JOIN successes ON (id, key)          (Q7 resume)
+    attempts = pending mapInPandas upload_batch                     (S6 sink)
+    summary  = manifest x attempts -> per-file outcome counts       (A9)
 
-* one ObjectStore connection per partition (vs per-call, bulkupload.py:236+)
-* bounded in-task retries emit one attempt ROW each (A4/A5) — the mutable
-  counters and the `uploaded` point-UPDATE (U2) become append-only data
+* a unit is a whole file (offset 0, read to EOF, PUT under its key) or, for
+  a file above `segment_size`, one byte range PUT as `key/part-NNNN` — the
+  wiring the reference's SEGMENT_SIZE (bulkupload.py:12) never got. A 10 GB
+  file is 100 parallel 100 MB units instead of one straggler, and no task
+  holds more than one unit's bytes in memory
+* every unit goes through the one loop: one ObjectStore connection per
+  partition (vs per-call, bulkupload.py:236+), bounded in-task retries,
+  one attempt ROW per try (A4/A5) — the mutable counters and the
+  `uploaded` point-UPDATE (U2) become append-only data
 * at-least-once with idempotent keys: a task retried by Spark re-PUTs the
   same key (same guarantee as the reference's PUT->flag gap, SURVEY.md §2.7)
 * Arrow-batched mapInPandas: rows stream through the Python worker in
   columnar batches; file bytes never collect on the driver
+
+`upload_manifest` is the one driver (resume read -> upload -> append ->
+summary) behind both `run_pipeline` and `cli upload`.
 """
 
 from __future__ import annotations
 
 import datetime
-import time
 from collections.abc import Iterator
 
 import pandas as pd
@@ -30,6 +39,7 @@ from pyspark.sql import types as T
 
 from swiftbulkuploader_spark.functions.paths import object_key
 from swiftbulkuploader_spark.sources.objectstore import StoreFactory, connect_with_backoff
+from swiftbulkuploader_spark.streaming.state_io import read_state_or_none
 
 ATTEMPTS_SCHEMA = T.StructType([
     T.StructField("id", T.LongType()),
@@ -42,32 +52,62 @@ ATTEMPTS_SCHEMA = T.StructType([
 ])
 
 
-def pending_work(manifest: DataFrame, attempts: DataFrame | None) -> DataFrame:
-    """Q7 — resume as a left-anti join against prior successes. With no
-    attempt log yet, everything not flagged uploaded is pending.
+def work_units(manifest: DataFrame, cutoff: str = "", segment_size: int = 0) -> DataFrame:
+    """The manifest exploded into upload units: every manifest column plus
+    `key`, `seg_offset` and `seg_length` (-1 = read to EOF).
 
-    A success only counts if it happened AFTER the file's last modification
-    (max ok-attempt ts >= manifest mtime; both are UTC-naive instants):
-    ids are stable `xxhash64(path)`, so without the mtime comparison a
-    re-crawled MODIFIED file would be skipped as already-uploaded — the
-    incremental-recrawl workflow (cli recrawl -> upload) depends on stale
-    successes not masking fresh bytes. Manifests without an mtime column
-    (not produced by this engine's ingest) fall back to the pure anti-join."""
-    pending = manifest.filter(~F.col("uploaded")) if "uploaded" in manifest.columns else manifest
+    With `segment_size` 0, or a file at or under it, the file is one unit
+    under its plain key. A larger file becomes ceil(size / segment_size)
+    units `key/part-NNNN` at offsets NNNN * segment_size; the last part
+    reads to EOF. Zero-byte and size-less rows are one whole-file unit, so
+    a manifest without a `size` column works when segment_size is 0."""
+    n_parts = (
+        F.greatest(F.ceil(F.col("size") / F.lit(segment_size)), F.lit(1)).cast("int")
+        if segment_size else F.lit(1)
+    )
+    key = object_key(F.col("path"), cutoff)
+    part = F.col("_part")
+    return manifest.withColumn("_part", F.explode(F.sequence(F.lit(0), n_parts - 1))).select(
+        *manifest.columns,
+        F.when(n_parts > 1, F.format_string("%s/part-%04d", key, part))
+        .otherwise(key).alias("key"),
+        (part.cast("long") * segment_size).alias("seg_offset"),
+        F.when(part == n_parts - 1, F.lit(-1).cast("long"))
+        .otherwise(F.lit(segment_size).cast("long")).alias("seg_length"),
+    )
+
+
+def pending_work(work: DataFrame, attempts: DataFrame | None) -> DataFrame:
+    """Q7 — resume as a left-anti join against prior successes. Rows
+    flagged `uploaded` are skipped whole; with no attempt log yet,
+    everything else is pending.
+
+    A row is a unit (it carries `key`, see `work_units`) or, for a raw
+    manifest, a whole file. It is pending unless an ok attempt for its
+    (id, key) — its id, for a raw manifest — is no older than the file's
+    mtime (both are UTC-naive instants): ids are stable `xxhash64(path)`,
+    so without the mtime comparison a re-crawled MODIFIED file would be
+    skipped as already-uploaded — the incremental-recrawl workflow (cli
+    recrawl -> upload) depends on stale successes not masking fresh
+    bytes. Per-unit resume means a file with 99 of 100 parts uploaded
+    retries only the missing part. Rows without an mtime column (not
+    produced by this engine's ingest) fall back to the pure anti-join."""
+    pending = work.filter(~F.col("uploaded")) if "uploaded" in work.columns else work
     if attempts is None:
         return pending
+    on = ["id", "key"] if "key" in pending.columns else ["id"]
     ok = attempts.filter(F.col("ok"))
     if "mtime" not in pending.columns:
-        return pending.join(ok.select("id").distinct(), "id", "left_anti")
-    last_ok = ok.groupBy("id").agg(F.max("ts").alias("_last_ok_ts"))
+        return pending.join(ok.select(*on).distinct(), on, "left_anti")
+    last_ok = ok.groupBy(*on).agg(F.max("ts").alias("_last_ok_ts"))
     return (
-        pending.join(last_ok, "id", "left")
+        pending.join(last_ok, on, "left")
         .filter(F.col("_last_ok_ts").isNull() | (F.col("_last_ok_ts") < F.col("mtime")))
         .drop("_last_ok_ts")
     )
 
 
-def _upload_batches(store_factory: StoreFactory, max_attempts: int, retry_sleep: float,
+def _upload_batches(store_factory: StoreFactory, max_attempts: int,
                     auth_base_sleep: float = 0.5):
     """Builds the mapInPandas function; one store per partition, reused
     across that partition's Arrow batches. The per-partition connect runs
@@ -80,7 +120,7 @@ def _upload_batches(store_factory: StoreFactory, max_attempts: int, retry_sleep:
         store = None
         try:
             for pdf in batches:
-                out = {k: [] for k in ("id", "path", "key", "ts", "try_no", "ok", "error")}
+                out = {k: [] for k in ATTEMPTS_SCHEMA.fieldNames()}
                 for row in pdf.itertuples(index=False):
                     if store is None:
                         store = connect_with_backoff(
@@ -91,7 +131,8 @@ def _upload_batches(store_factory: StoreFactory, max_attempts: int, retry_sleep:
                         ok, err = True, None
                         try:
                             with open(row.path, "rb") as fh:
-                                data = fh.read()
+                                fh.seek(row.seg_offset)
+                                data = fh.read(row.seg_length)
                             store.put(row.key, data)
                         except Exception as e:  # noqa: BLE001 - each failure becomes a row
                             ok, err = False, f"{type(e).__name__}: {e}"
@@ -104,8 +145,6 @@ def _upload_batches(store_factory: StoreFactory, max_attempts: int, retry_sleep:
                         out["error"].append(err)
                         if ok:
                             break
-                        if try_no < max_attempts and retry_sleep:
-                            time.sleep(retry_sleep)
                 yield pd.DataFrame(out)
         finally:
             if store is not None:
@@ -116,215 +155,136 @@ def _upload_batches(store_factory: StoreFactory, max_attempts: int, retry_sleep:
 
 def upload(manifest: DataFrame, store_factory: StoreFactory,
            prior_attempts: DataFrame | None = None, cutoff: str = "",
-           max_attempts: int = 5, retry_sleep: float = 0.0,
-           parallelism: int | None = None,
-           auth_base_sleep: float = 0.5) -> DataFrame:
+           max_attempts: int = 5, parallelism: int | None = None,
+           segment_size: int = 0, auth_base_sleep: float = 0.5) -> DataFrame:
     """Run the upload stage; returns the attempt-log DataFrame (lazy — write
-    it to the attempts table to execute).
+    it to the attempts table to execute), one row per PUT try.
 
-    `parallelism` repartitions the pending set: upload is IO-bound per row,
-    so width = cluster slots, independent of input file splits (the same
-    reasoning as the reference's "increase N processes", readme.md:39-42,
-    minus the manual queue).
+    `segment_size` > 0 splits files above it into parts (`work_units`);
+    0 uploads whole files. `parallelism` repartitions the pending units:
+    upload is IO-bound per row, so width = cluster slots, independent of
+    input file splits (the same reasoning as the reference's "increase N
+    processes", readme.md:39-42, minus the manual queue).
     """
-    pend = pending_work(manifest, prior_attempts).select(
-        "id", "path", object_key(F.col("path"), cutoff).alias("key")
+    pend = pending_work(work_units(manifest, cutoff, segment_size), prior_attempts).select(
+        "id", "path", "key", "seg_offset", "seg_length"
     )
     if parallelism:
         pend = pend.repartition(parallelism)
-    fn = _upload_batches(store_factory, max_attempts, retry_sleep, auth_base_sleep)
+    fn = _upload_batches(store_factory, max_attempts, auth_base_sleep)
     return pend.mapInPandas(fn, ATTEMPTS_SCHEMA)
 
 
-def latest_status(attempts: DataFrame) -> DataFrame:
-    """W1 — latest-wins per id: the immutable replacement for the mutable
-    `uploaded` flag (bulkupload.py:253-261)."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("id").orderBy(F.col("ts").desc(), F.col("try_no").desc())
-    return (
-        attempts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("id", "path", "key", "ts", "ok", "error")
+def _file_outcomes(manifest: DataFrame, attempts: DataFrame, mtime_aware: bool = True,
+                   trust_prior: bool = True) -> DataFrame:
+    """(id, uploaded, failed), one row per manifest id — the per-file
+    outcome `apply_attempts` documents, in one join and one aggregation."""
+    prior = (
+        F.coalesce(F.col("uploaded"), F.lit(False))
+        if trust_prior and "uploaded" in manifest.columns else F.lit(False)
     )
-
-
-def upload_segmented(manifest: DataFrame, store_factory: StoreFactory,
-                     segment_size: int | None = None, cutoff: str = "",
-                     parallelism: int | None = None,
-                     prior_attempts: DataFrame | None = None) -> DataFrame:
-    """Multi-part upload for oversized files — the wiring the reference's
-    SEGMENT_SIZE (bulkupload.py:12) never got (SURVEY.md §3.3).
-
-    Files larger than `segment_size` become one task PER SEGMENT: the
-    segment plan (explode/sequence) joins into the upload stage, each task
-    ranged-reads only its slice and PUTs `key/part-NNNN`; files at or under
-    the threshold upload whole under their plain key. A 10 GB file is 100
-    parallel 100 MB tasks instead of one straggler — and no task ever holds
-    more than one segment in memory.
-
-    Returns an attempt log with one row per object PUT (whole file or part).
-    """
-    from swiftbulkuploader_spark.sources.segments import DEFAULT_SEGMENT_SIZE, segment_plan
-
-    if segment_size is None:
-        segment_size = DEFAULT_SEGMENT_SIZE
-
-    keyed = manifest.select(
-        "id", "path", "size", object_key(F.col("path"), cutoff).alias("base_key")
+    mtime_aware = mtime_aware and "mtime" in manifest.columns
+    files = manifest.select("id", prior.alias("_prior"), *(["mtime"] if mtime_aware else []))
+    cond = F.col("id") == F.col("_aid")
+    if mtime_aware:
+        cond = cond & (F.col("mtime").isNull() | (F.col("ts") >= F.col("mtime")))
+    logged = attempts.select(F.col("id").alias("_aid"), "key", "ts", "ok")
+    per_file = files.join(logged, cond, "left").groupBy("id").agg(
+        F.max("_prior").alias("_prior"),
+        F.size(F.collect_set("key")).alias("_n_keys"),
+        F.size(F.collect_set(F.when(F.col("ok"), F.col("key")))).alias("_n_ok"),
     )
-    small = keyed.filter(F.col("size") <= segment_size).select(
-        "id", "path",
-        F.col("base_key").alias("key"),
-        F.lit(0).alias("seg_offset").cast("long"),
-        F.col("size").alias("seg_length"),
+    uploaded = F.col("_prior") | ((F.col("_n_keys") > 0) & (F.col("_n_ok") == F.col("_n_keys")))
+    return per_file.select(
+        "id", uploaded.alias("uploaded"),
+        (~uploaded & (F.col("_n_ok") < F.col("_n_keys"))).alias("failed"),
     )
-    big = keyed.filter(F.col("size") > segment_size)
-    big_plan = (
-        segment_plan(big.select("path", "size"), segment_size)
-        .join(big.select("id", "path", "base_key"), "path")
-        .select(
-            "id", "path",
-            F.format_string("%s/part-%04d", F.col("base_key"), F.col("seg_no")).alias("key"),
-            "seg_offset", "seg_length",
-        )
-    )
-    work = small.unionByName(big_plan)
-    if prior_attempts is not None:
-        # per-PART resume: a file with 99 of 100 parts uploaded retries only
-        # the missing part (file-level anti-join would wrongly skip it —
-        # one successful part row would mark the whole id done)
-        done_keys = prior_attempts.filter(F.col("ok")).select("key").distinct()
-        work = work.join(done_keys, "key", "left_anti")
-    if parallelism:
-        work = work.repartition(parallelism)
-
-    def fn(batches):
-        store = None
-        try:
-            for pdf in batches:
-                out = {k: [] for k in ("id", "path", "key", "ts", "try_no", "ok", "error")}
-                for row in pdf.itertuples(index=False):
-                    if store is None:
-                        store = connect_with_backoff(store_factory.build)
-                    ts = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-                    ok, err = True, None
-                    try:
-                        with open(row.path, "rb") as fh:
-                            fh.seek(row.seg_offset)
-                            data = fh.read(row.seg_length)
-                        store.put(row.key, data)
-                    except Exception as e:  # noqa: BLE001 - failures become rows
-                        ok, err = False, f"{type(e).__name__}: {e}"
-                    out["id"].append(row.id)
-                    out["path"].append(row.path)
-                    out["key"].append(row.key)
-                    out["ts"].append(ts)
-                    out["try_no"].append(1)
-                    out["ok"].append(ok)
-                    out["error"].append(err)
-                yield pd.DataFrame(out)
-        finally:
-            if store is not None:
-                store.close()
-
-    return work.mapInPandas(fn, ATTEMPTS_SCHEMA)
 
 
 def apply_attempts(manifest: DataFrame, attempts: DataFrame,
                    mtime_aware: bool = True,
                    trust_prior: bool = True) -> DataFrame:
-    """Materialize the mutable view: manifest with `uploaded` derived from
-    the attempt log (U2's `UPDATE ... SET uploaded=1` as a batch join —
-    the engine's MERGE INTO; run it when compacting the manifest table).
+    """Materialize the mutable view: the manifest plus per-file `uploaded`
+    and `failed` flags derived from the attempt log (U2's `UPDATE ... SET
+    uploaded=1` as a batch join — the engine's MERGE INTO; run it when
+    compacting the manifest table).
 
-    max(ok) per id instead of latest-wins: once any attempt succeeded the
-    file is uploaded, regardless of later failed re-attempts. A manifest
-    row already flagged uploaded=True STAYS uploaded even if the log was
-    compacted/rotated since — the flag is the durable record, the log the
-    incremental one (pending_work trusts the flag the same way).
+    A file is uploaded when every key logged for it (its whole-file key,
+    or each of its parts) has an ok attempt: one failed part keeps the
+    whole file pending. Once any attempt on a key succeeded the key is
+    done, regardless of later failed re-attempts. `failed` is disjoint
+    from `uploaded`: a file not uploaded with a logged key that has no ok
+    attempt. A manifest row already flagged uploaded=True STAYS uploaded
+    even if the log was compacted/rotated since — the flag is the durable
+    record, the log the incremental one (pending_work trusts the flag the
+    same way).
 
-    ``mtime_aware`` (default) applies `pending_work`'s modification rule: a
-    success older than the file's current mtime does NOT mark it uploaded
-    (the re-crawled file has fresh bytes the store hasn't seen), so
-    `status` and the next `upload` agree on what is pending. Pass False
-    when replaying the log for a PAST instant (`status_asof`): comparing a
-    historical log against CURRENT mtimes would silently rewrite history
-    whenever a later recrawl bumps a file's mtime.
+    ``mtime_aware`` (default) applies `pending_work`'s modification rule:
+    only attempts no older than the file's current mtime count (NULL mtime:
+    all count), so a success before a re-crawl does NOT mark the file
+    uploaded (the store hasn't seen its fresh bytes) and `status` and the
+    next `upload` agree on what is pending. Pass False when replaying the
+    log for a PAST instant (`status_asof`): comparing a historical log
+    against CURRENT mtimes would silently rewrite history whenever a later
+    recrawl bumps a file's mtime.
 
     ``trust_prior`` (default) ORs the manifest's durable `uploaded` flag
     into the result. Pass False when the attempt log is AUTHORITATIVE for
     the requested view — `status_asof` does: a durable flag written by a
     compaction AFTER the as-of instant must not leak into a historical
     snapshot, which should derive purely from the time-filtered log."""
-    prior = (
-        F.coalesce(F.col("uploaded"), F.lit(False))
-        if trust_prior and "uploaded" in manifest.columns else F.lit(False)
-    )
-    ok = attempts.filter(F.col("ok"))
-    if not mtime_aware or "mtime" not in manifest.columns:
-        status = ok.select("id").distinct().withColumn("_ok", F.lit(True))
-        return (
-            manifest.withColumn("_prior", prior)
-            .drop("uploaded")
-            .join(status, "id", "left")
-            .withColumn(
-                "uploaded", F.col("_prior") | F.coalesce(F.col("_ok"), F.lit(False))
-            )
-            .drop("_ok", "_prior")
-        )
-    last_ok = ok.groupBy("id").agg(F.max("ts").alias("_last_ok_ts"))
-    return (
-        manifest.withColumn("_prior", prior)
-        .drop("uploaded")
-        .join(last_ok, "id", "left")
-        .withColumn(
-            "uploaded",
-            # NULL mtime (no modification info) -> any success counts,
-            # mirroring pending_work's filter semantics on the same rows
-            F.col("_prior")
-            | F.when(F.col("_last_ok_ts").isNull(), F.lit(False)).otherwise(
-                F.col("mtime").isNull()
-                | (F.col("_last_ok_ts") >= F.col("mtime"))
-            ),
-        )
-        .drop("_last_ok_ts", "_prior")
+    return manifest.drop("uploaded").join(
+        _file_outcomes(manifest, attempts, mtime_aware, trust_prior), "id"
     )
 
 
-def report(attempts: DataFrame) -> DataFrame:
-    """A9/S10 — end-of-run reconciliation: per-outcome totals over the
-    *final* status of each id (not raw attempt rows)."""
-    return latest_status(attempts).groupBy("ok").agg(
-        F.count("*").alias("n_files"),
-    )
+def summarize(manifest: DataFrame, attempts: DataFrame | None) -> dict:
+    """A9/S10 — reconciliation against the CURRENT manifest:
+    {total, uploaded, failed, pct_done} over `apply_attempts`' per-file
+    outcome. Files no longer in the manifest do not count, whatever the
+    log holds; `attempts` None (no log yet) leaves only flagged files
+    uploaded."""
+    if attempts is None:
+        attempts = manifest.sparkSession.createDataFrame([], ATTEMPTS_SCHEMA)
+    r = _file_outcomes(manifest, attempts).agg(
+        F.count(F.lit(1)).alias("total"),
+        F.count(F.when(F.col("uploaded"), 1)).alias("uploaded"),
+        F.count(F.when(F.col("failed"), 1)).alias("failed"),
+    ).first()
+    total, done = r["total"], r["uploaded"]
+    return {
+        "total": total,
+        "uploaded": done,
+        "failed": r["failed"],
+        "pct_done": round(100.0 * done / total, 8) if total else 100.0,
+    }
+
+
+def upload_manifest(manifest: DataFrame, store_factory: StoreFactory,
+                    attempts_path: str, cutoff: str = "", max_attempts: int = 5,
+                    parallelism: int | None = None, segment_size: int = 0) -> dict:
+    """Resume-read the attempt log -> upload the pending units -> append
+    their attempt rows -> `summarize` the log against `manifest`. The
+    append is the first job; the summary reads the log only after it has
+    committed. Returns summary counters (driver-side smalls only)."""
+    spark = manifest.sparkSession
+    prior = read_state_or_none(spark, attempts_path)
+    upload(manifest, store_factory, prior, cutoff, max_attempts, parallelism,
+           segment_size).write.mode("append").parquet(attempts_path)
+    return summarize(manifest, read_state_or_none(spark, attempts_path))
 
 
 def run_pipeline(spark, source_dir: str, store_factory: StoreFactory,
                  attempts_path: str, cutoff: str = "", max_attempts: int = 5,
                  parallelism: int | None = None) -> dict:
-    """End-to-end: ingest -> resume-filter -> upload -> append attempts ->
-    report. Returns summary counters (driver-side smalls only)."""
+    """End-to-end: ingest -> `upload_manifest` (whole files)."""
     from swiftbulkuploader_spark.sources.ingest import ingest_listing
 
-    # cache: the manifest feeds the upload AND the final count — without it
+    # cache: the manifest feeds the upload AND the summary — without it
     # every action re-executes the distributed walk
     manifest = ingest_listing(spark, source_dir).filter(F.col("error").isNull()).cache()
     try:
-        prior = spark.read.parquet(attempts_path)
-    except Exception:  # noqa: BLE001 - first run: no attempt log yet
-        prior = None
-    attempts = upload(manifest, store_factory, prior, cutoff, max_attempts,
-                      parallelism=parallelism)
-    attempts.write.mode("append").parquet(attempts_path)
-    full_log = spark.read.parquet(attempts_path)
-    rep = {r["ok"]: r["n_files"] for r in report(full_log).collect()}
-    total = manifest.count()
-    manifest.unpersist()
-    done = rep.get(True, 0)
-    return {
-        "total": total,
-        "uploaded": done,
-        "failed": rep.get(False, 0),
-        "pct_done": round(100.0 * done / total, 8) if total else 100.0,
-    }
+        return upload_manifest(manifest, store_factory, attempts_path, cutoff,
+                               max_attempts, parallelism)
+    finally:
+        manifest.unpersist()

@@ -1,5 +1,6 @@
-"""Frozen-state reads for foreachBatch sinks that maintain their own
-parquet state (frontier slots, attempt logs, cluster labels).
+"""Frozen-state reads for jobs that maintain their own parquet state
+(frontier slots, attempt logs, cluster labels): the foreachBatch sinks
+and the batch upload pipeline (plans/upload.py).
 
 The round-10 ADVICE defect class this module closes: a bare
 ``except Exception`` around the state read — intended only for the
@@ -13,7 +14,8 @@ invariants; for the attempt log it meant re-uploading done files.
 checks path existence through the Hadoop FileSystem of the path itself
 (works for local dirs in tests and object stores in production — the
 same resolution ``spark.read`` uses), returns ``None`` only when the
-state genuinely does not exist yet, and lets EVERY other failure
+state genuinely does not exist yet (no path, or a directory holding no
+committed data file), and lets EVERY other failure
 propagate so the foreachBatch attempt fails and the checkpoint replays
 the batch against intact state.
 """
@@ -23,24 +25,45 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for `path`, resolved exactly like
+    spark.read would (local, HDFS, or an object store)."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
+
+
 def state_path_exists(spark: SparkSession, path: str) -> bool:
-    """True iff `path` exists on its own filesystem (local, HDFS, or an
-    object store — resolved exactly like spark.read would). Failures of
-    the existence CHECK itself propagate: an unreachable filesystem is
-    not "no state"."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
+    """True iff `path` exists on its own filesystem. Failures of the
+    existence CHECK itself propagate: an unreachable filesystem is not
+    "no state"."""
+    fs, jpath = _fs_path(spark, path)
     return bool(fs.exists(jpath))
 
 
+def _has_data_files(fs, jpath) -> bool:
+    """True iff the directory `jpath` holds a committed data file: one
+    whose name, and the name of every directory between it and `jpath`,
+    starts with neither '_' nor '.' — the entries spark.read itself
+    skips (`_temporary/`, `_SUCCESS`, `.crc` checksums)."""
+    for st in fs.listStatus(jpath):
+        if st.getPath().getName().startswith(("_", ".")):
+            continue
+        if not st.isDirectory() or _has_data_files(fs, st.getPath()):
+            return True
+    return False
+
+
 def read_state_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """spark.read.parquet(path), or None ONLY if the path does not
-    exist yet (the legitimate first-batch case). Any other read failure
-    (IO error, corrupt footer, permissions) raises, failing the batch
-    so the streaming checkpoint replays it — state is never silently
-    treated as empty."""
-    if not state_path_exists(spark, path):
+    """spark.read.parquet(path), or None ONLY if there is no state yet:
+    the path does not exist, or it is a directory with no committed data
+    file (a first job that failed before its commit leaves exactly that —
+    an empty directory, or one holding only `_temporary/`). Any other
+    read failure (IO error, corrupt footer, permissions) raises, failing
+    the batch so the streaming checkpoint replays it — state is never
+    silently treated as empty."""
+    fs, jpath = _fs_path(spark, path)
+    if not fs.exists(jpath):
+        return None
+    if fs.getFileStatus(jpath).isDirectory() and not _has_data_files(fs, jpath):
         return None
     return spark.read.parquet(path)

@@ -46,6 +46,39 @@ def test_prepare_upload_status_roundtrip(spark, tree, tmp_path, capsys):
     assert "uploaded=3 failed=0 pending=0" in out
 
 
+def test_segmented_upload_status_roundtrip(spark, tmp_path, capsys):
+    """--segment-size: big files land as parts, small ones whole, and a
+    modified big file is re-uploaded part by part on the next run."""
+    import time
+
+    src = tmp_path / "src"
+    src.mkdir()
+    big = bytes(range(256)) * 40                      # 10240 -> 3 parts @ 4096
+    (src / "big.bin").write_bytes(big)
+    (src / "small.txt").write_bytes(b"S")
+    manifest, attempts, bucket = (str(tmp_path / d) for d in ("manifest", "attempts", "bucket"))
+    upload = ["upload", manifest, bucket, attempts, "--cutoff", "src", "--segment-size", "4096"]
+
+    main(["prepare", str(src), manifest])
+    assert main(upload) == 0
+    out = capsys.readouterr().out
+    assert "2/2 files uploaded. 100.00000000%" in out
+    parts = [pathlib.Path(bucket) / f"big.bin/part-{i:04d}" for i in range(3)]
+    assert b"".join(p.read_bytes() for p in parts) == big
+    assert (pathlib.Path(bucket) / "small.txt").read_bytes() == b"S"
+    assert main(["status", manifest, attempts]) == 0
+    assert "uploaded=2 failed=0 pending=0" in capsys.readouterr().out
+
+    time.sleep(0.05)
+    (src / "big.bin").write_bytes(big[::-1])
+    main(["recrawl", str(src), manifest])
+    assert main(upload) == 0
+    assert b"".join(p.read_bytes() for p in parts) == big[::-1]
+    capsys.readouterr()
+    assert main(["status", manifest, attempts]) == 0
+    assert "uploaded=2 failed=0 pending=0" in capsys.readouterr().out
+
+
 def test_status_before_any_upload(spark, tree, tmp_path, capsys):
     manifest = str(tmp_path / "manifest")
     main(["prepare", str(tree), manifest])

@@ -11,10 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from swiftbulkuploader_spark.plans.upload import (
-    latest_status,
     pending_work,
-    report,
     run_pipeline,
+    summarize,
     upload,
 )
 from swiftbulkuploader_spark.sources.ingest import ingest_listing
@@ -110,7 +109,7 @@ class TestUploadResume:
         n_failed_rows = log.filter(~F.col("ok")).count()
         assert n_failed_rows == 6  # 5 exhausted (run 1) + 1 (run 2, try 1)
 
-    def test_latest_status_and_report(self, spark, tree, tmp_path):
+    def test_summary_counts_final_outcome(self, spark, tree, tmp_path):
         tmp_path_src, files = tree
         src = str(tmp_path_src / "src")
         factory = StoreFactory("localfs", root=str(tmp_path / "store2"),
@@ -118,11 +117,52 @@ class TestUploadResume:
         manifest = ingest_listing(spark, src).filter(F.col("error").isNull())
         attempts = upload(manifest, factory, cutoff=os.path.basename(src))
         attempts_rows = attempts.cache()
-        latest = latest_status(attempts_rows)
-        assert latest.count() == len(files)
-        rep = {r["ok"]: r["n_files"] for r in report(attempts_rows).collect()}
-        assert rep == {True: len(files) - 1, False: 1}
+        # 5 failed tries of will_fail.dat are one failed file, not five
+        assert summarize(manifest, attempts_rows) == {
+            "total": len(files), "uploaded": len(files) - 1, "failed": 1,
+            "pct_done": round(100.0 * (len(files) - 1) / len(files), 8),
+        }
         attempts_rows.unpersist()
+
+    def test_summary_counts_only_the_current_manifest(self, spark, tree, tmp_path):
+        """Files removed from the tree since an earlier run drop out of the
+        summary: their old successes no longer count as uploaded."""
+        tmp_path_src, files = tree
+        src = str(tmp_path_src / "src")
+        factory = StoreFactory("localfs", root=str(tmp_path / "store3"))
+        attempts_path = str(tmp_path / "attempts3")
+        cutoff = os.path.basename(src)
+        assert run_pipeline(spark, src, factory, attempts_path, cutoff=cutoff)["uploaded"] == len(files)
+        os.remove(os.path.join(src, "a", "one.txt"))
+        os.remove(os.path.join(src, "c", "empty.dat"))
+        res = run_pipeline(spark, src, factory, attempts_path, cutoff=cutoff)
+        assert res == {"total": len(files) - 2, "uploaded": len(files) - 2,
+                       "failed": 0, "pct_done": 100.0}
+
+
+class TestAttemptLogReads:
+    """The attempt log is read through state_io.read_state_or_none: only
+    a log with no committed data file yet reads as "no state"."""
+
+    def test_uncommitted_directories_read_as_no_state(self, spark, tmp_path):
+        from swiftbulkuploader_spark.streaming.state_io import read_state_or_none
+
+        empty = tmp_path / "empty"
+        empty.mkdir()
+        assert read_state_or_none(spark, str(empty)) is None
+        # a first job that died before its commit: only _temporary/ holds data
+        uncommitted = tmp_path / "uncommitted"
+        spark.range(3).write.parquet(str(uncommitted / "_temporary" / "0"))
+        assert read_state_or_none(spark, str(uncommitted)) is None
+
+    def test_corrupt_part_file_raises(self, spark, tmp_path):
+        from swiftbulkuploader_spark.streaming.state_io import read_state_or_none
+
+        log = tmp_path / "attempts"
+        log.mkdir()
+        (log / "part-00000.parquet").write_bytes(b"not a parquet footer")
+        with pytest.raises(Exception, match="(?i)parquet|footer"):
+            read_state_or_none(spark, str(log))
 
 
 class TestStoreSafety:

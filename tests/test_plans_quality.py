@@ -175,6 +175,31 @@ class TestApplyAttempts:
         got = {r["id"]: r["uploaded"] for r in apply_attempts(manifest, attempts).collect()}
         assert got == {1: True, 2: True, 3: False}  # any success wins; no attempts -> False
 
+    def test_failed_part_keeps_file_pending(self, spark):
+        """A file is uploaded only when EVERY key logged for it has an ok
+        attempt: ok parts 0 and 2 do not hide a failed part 1."""
+        import datetime
+
+        from swiftbulkuploader_spark.plans.upload import ATTEMPTS_SCHEMA, apply_attempts, summarize
+
+        manifest = spark.createDataFrame(
+            [(1, "/big", 12288, None, False, None), (2, "/small", 4, None, False, None)],
+            "id: long, path: string, size: long, mtime: timestamp, uploaded: boolean, error: string",
+        )
+        ts = datetime.datetime(2024, 1, 1)
+        attempts = spark.createDataFrame(
+            [(1, "/big", "big/part-0000", ts, 1, True, None),
+             (1, "/big", "big/part-0001", ts, 1, False, "x"),
+             (1, "/big", "big/part-0002", ts, 1, True, None),
+             (2, "/small", "small", ts, 1, True, None)],
+            ATTEMPTS_SCHEMA,
+        )
+        flagged = apply_attempts(manifest, attempts).collect()
+        assert {r["id"]: r["uploaded"] for r in flagged} == {1: False, 2: True}
+        assert {r["id"]: r["failed"] for r in flagged} == {1: True, 2: False}
+        assert summarize(manifest, attempts) == {
+            "total": 2, "uploaded": 1, "failed": 1, "pct_done": 50.0}
+
 
 class TestBucketedJoin:
     def test_bucketed_tables_join_without_shuffle(self, spark, tmp_path):

@@ -72,7 +72,7 @@ class TestRangedReads:
 
 class TestSegmentedUpload:
     def test_big_files_multipart_small_files_whole(self, spark, tmp_path):
-        from swiftbulkuploader_spark.plans.upload import upload_segmented
+        from swiftbulkuploader_spark.plans.upload import upload
         from swiftbulkuploader_spark.sources.ingest import ingest_listing
         from swiftbulkuploader_spark.sources.objectstore import LocalFSObjectStore, StoreFactory
         from pyspark.sql import functions as F
@@ -86,8 +86,7 @@ class TestSegmentedUpload:
 
         manifest = ingest_listing(spark, str(src)).filter(F.col("error").isNull())
         factory = StoreFactory("localfs", root=str(tmp_path / "bucket"))
-        attempts = upload_segmented(manifest, factory, segment_size=4096,
-                                    cutoff="src").cache()
+        attempts = upload(manifest, factory, segment_size=4096, cutoff="src").cache()
 
         rows = attempts.collect()
         assert all(r["ok"] for r in rows)
@@ -108,7 +107,7 @@ class TestSegmentedUpload:
 
     def test_per_part_resume(self, spark, tmp_path):
         """Resume retries only missing/failed parts, not whole files."""
-        from swiftbulkuploader_spark.plans.upload import upload_segmented
+        from swiftbulkuploader_spark.plans.upload import upload
         from swiftbulkuploader_spark.sources.ingest import ingest_listing
         from swiftbulkuploader_spark.sources.objectstore import LocalFSObjectStore, StoreFactory
         from pyspark.sql import functions as F
@@ -118,18 +117,72 @@ class TestSegmentedUpload:
         (src / "big.bin").write_bytes(bytes(range(256)) * 48)  # 12288 -> 3 parts @ 4096
         manifest = ingest_listing(spark, str(src)).filter(F.col("error").isNull())
         bucket = str(tmp_path / "bucket2")
-        # run 1: part-0001 fails (injected), others succeed
-        f1 = StoreFactory("localfs", root=bucket, fail_substring="part-0001", fail_times=1)
-        att1 = upload_segmented(manifest, f1, segment_size=4096, cutoff="src2")
+        # run 1: part-0001 fails every one of its 5 tries (injected), others succeed
+        f1 = StoreFactory("localfs", root=bucket, fail_substring="part-0001", fail_times=5)
+        att1 = upload(manifest, f1, segment_size=4096, cutoff="src2")
         att1.write.parquet(str(tmp_path / "att"))
         prior = spark.read.parquet(str(tmp_path / "att"))
         assert prior.filter("ok").count() == 2
         # run 2 with per-part resume: exactly ONE attempt row, for part-0001
         f2 = StoreFactory("localfs", root=bucket)
-        att2 = upload_segmented(manifest, f2, segment_size=4096, cutoff="src2",
-                                prior_attempts=prior).collect()
+        att2 = upload(manifest, f2, segment_size=4096, cutoff="src2",
+                      prior_attempts=prior).collect()
         assert [r["key"] for r in att2] == ["big.bin/part-0001"]
         assert att2[0]["ok"]
         store = LocalFSObjectStore(bucket)
         data = b"".join(store.get(f"big.bin/part-{i:04d}") for i in range(3))
         assert data == bytes(range(256)) * 48
+
+    def test_failed_part_retries_inside_the_loop(self, spark, tmp_path):
+        """Parts share the whole-file PUT loop: a part that fails once
+        succeeds on try 2, and both tries are logged."""
+        from swiftbulkuploader_spark.plans.upload import upload
+        from swiftbulkuploader_spark.sources.ingest import ingest_listing
+        from swiftbulkuploader_spark.sources.objectstore import LocalFSObjectStore, StoreFactory
+
+        src = tmp_path / "src3"
+        src.mkdir()
+        data = bytes(range(256)) * 48      # 12288 -> 3 parts @ 4096
+        (src / "big.bin").write_bytes(data)
+        manifest = ingest_listing(spark, str(src)).filter(F.col("error").isNull())
+        bucket = str(tmp_path / "bucket3")
+        factory = StoreFactory("localfs", root=bucket, fail_substring="part-0001", fail_times=1)
+        rows = upload(manifest, factory, segment_size=4096, cutoff="src3").collect()
+        tries = sorted((r["key"], r["try_no"], r["ok"]) for r in rows)
+        assert tries == [
+            ("big.bin/part-0000", 1, True),
+            ("big.bin/part-0001", 1, False),
+            ("big.bin/part-0001", 2, True),
+            ("big.bin/part-0002", 1, True),
+        ]
+        store = LocalFSObjectStore(bucket)
+        assert b"".join(store.get(f"big.bin/part-{i:04d}") for i in range(3)) == data
+
+    def test_touched_big_file_makes_every_part_pending(self, spark, tmp_path):
+        """Part resume honours mtime like whole files do: after a full
+        segmented upload, touching the file makes all of its parts pending."""
+        import os
+        import time
+
+        from swiftbulkuploader_spark.plans.upload import pending_work, upload, work_units
+        from swiftbulkuploader_spark.sources.ingest import ingest_listing
+        from swiftbulkuploader_spark.sources.objectstore import StoreFactory
+
+        src = tmp_path / "src4"
+        src.mkdir()
+        (src / "big.bin").write_bytes(bytes(range(256)) * 40)  # 10240 -> 3 parts
+        (src / "small.bin").write_bytes(b"tiny")
+        factory = StoreFactory("localfs", root=str(tmp_path / "bucket4"))
+        log = str(tmp_path / "att4")
+        manifest = ingest_listing(spark, str(src)).filter(F.col("error").isNull())
+        upload(manifest, factory, segment_size=4096, cutoff="src4").write.parquet(log)
+        prior = spark.read.parquet(log)
+        assert pending_work(work_units(manifest, "src4", 4096), prior).count() == 0
+
+        time.sleep(0.05)
+        os.utime(src / "big.bin")
+        manifest = ingest_listing(spark, str(src)).filter(F.col("error").isNull())
+        pending = pending_work(work_units(manifest, "src4", 4096), prior)
+        assert sorted(r["key"] for r in pending.collect()) == [
+            "big.bin/part-0000", "big.bin/part-0001", "big.bin/part-0002",
+        ]
