@@ -8,8 +8,9 @@ operable indefinitely:
 
 * `manifest_delta`    — diff two crawls: what appeared, vanished, changed.
                         Feeds incremental upload (only added/modified).
-* `compact_attempts`  — bound the attempt log: keep each id's latest row
-                        (plus, optionally, its failure history), rewrite.
+* `compact_attempts`  — bound the attempt log: keep each key's latest and
+                        latest ok row (plus, optionally, its failure
+                        history), rewrite.
 * `status_asof`       — time travel: the uploaded-state of every file as of
                         time T, derived by filtering the log before merging
                         (the append-only model gives snapshots for free —
@@ -45,20 +46,23 @@ def manifest_delta(old: DataFrame, new: DataFrame) -> DataFrame:
 
 
 def compact_attempts(attempts: DataFrame, keep_failures: bool = True) -> DataFrame:
-    """Bound the attempt log: the latest attempt per id always survives;
-    with `keep_failures`, every failed row of ids that never succeeded also
-    survives (the error-report surface, A5). Run periodically and rewrite —
-    storage tracks live files, not total attempt history."""
-    w = Window.partitionBy("id").orderBy(F.col("ts").desc(), F.col("try_no").desc())
-    ranked = attempts.withColumn("rn", F.row_number().over(w))
-    latest = ranked.filter(F.col("rn") == 1).drop("rn")
-    if not keep_failures:
-        return latest
-    ever_ok = attempts.filter(F.col("ok")).select("id").distinct()
-    failed_history = (
-        attempts.filter(~F.col("ok")).join(ever_ok, "id", "left_anti")
+    """Bound the attempt log: per (id, key) — a whole file, or one of its
+    parts — the latest attempt and the latest ok attempt survive; with
+    `keep_failures`, every failed row of keys that never succeeded also
+    survives (the error-report surface, A5). Those two rows decide both
+    the mtime-aware resume rule and "every logged key ok", so
+    `apply_attempts` and `pending_work` answer the same on the compacted
+    log. Run periodically and rewrite — storage tracks live files, not
+    total attempt history."""
+    w = Window.partitionBy("id", "key")
+    newest = (F.col("ts").desc(), F.col("try_no").desc())
+    keep = (
+        (F.row_number().over(w.orderBy(*newest)) == 1)
+        | (F.col("ok") & (F.row_number().over(w.orderBy(F.col("ok").desc(), *newest)) == 1))
     )
-    return latest.unionByName(failed_history).distinct()
+    if keep_failures:
+        keep = keep | ~F.max("ok").over(w)
+    return attempts.withColumn("_keep", keep).filter("_keep").drop("_keep")
 
 
 def status_asof(manifest: DataFrame, attempts: DataFrame, ts) -> DataFrame:

@@ -13,6 +13,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def driver_memory(mem_total_bytes: int) -> str:
+    """Default driver heap: half the host's memory in whole GiB, at least
+    1g and at most 24g. The JVM shares the host with its Python workers and
+    the OS, so a heap the host cannot back gets the JVM OOM-killed before
+    Spark would evict a cached block."""
+    return f"{max(1, min(24, mem_total_bytes // 2 // 2**30))}g"
+
+
 # Tuned for the local[32] test harness; on a real cluster these are
 # overridden by spark-submit conf. Shuffle partitions are deliberately set
 # low locally and expected to be sized ~2-3x total cores at scale (AQE
@@ -29,12 +38,6 @@ _LOCAL_DEFAULTS = {
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
-    # 24g (round 12): at 8g the ~200-query bench session's persisted/
-    # checkpointed substrate blocks overflowed the unified storage pool
-    # and evicted each other — a measured 251 s -> 221 s total-bench
-    # recovery (x1_minhash_exact 6.3 -> 2.7 s, the whole x8 family back
-    # to r10 levels) came from the heap bump ALONE. The box has 128 GiB;
-    # on a real cluster executor memory is sized per-node by spark-submit.
     # 8000 = HotSpot's HugeMethodLimit: the JVM NEVER JIT-compiles a
     # method above 8000 bytecodes, so a whole-stage-codegen function past
     # it executes as INTERPRETED BYTECODE — measured ~4.5x slower than
@@ -46,7 +49,16 @@ _LOCAL_DEFAULTS = {
     # compiled. Scale-independent (a JVM property, not a data-size tune);
     # Spark's default 65535 only guards janino's hard 64 KB failure.
     "spark.sql.codegen.hugeMethodLimit": "8000",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+    # Driver heap (`driver_memory`): half the host's physical memory
+    # (sysconf's pages x page size = MemTotal on Linux), capped at 24g. The
+    # cap (round 12): at 8g the ~200-query bench session's persisted/
+    # checkpointed substrate blocks overflowed the unified storage pool
+    # and evicted each other — a measured 251 s -> 221 s total-bench
+    # recovery on a 128 GiB box came from the heap bump ALONE. A fixed
+    # 24g on a 15.7 GiB host got the JVM OOM-killed instead. On a real
+    # cluster executor memory is sized per-node by spark-submit.
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    or driver_memory(os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")),
     "spark.sql.warehouse.dir": os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),
 }
 

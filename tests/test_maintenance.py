@@ -69,6 +69,57 @@ class TestCompaction:
         s_comp = {r["id"]: r["uploaded"] for r in apply_attempts(manifest, compacted).collect()}
         assert s_full == s_comp == {1: True, 2: False, 3: True}
 
+    def test_latest_and_latest_ok_kept_per_key(self, spark):
+        log = spark.createDataFrame([
+            (5, "/e", "e/part-0000", _ts(1), 1, True, None),
+            (5, "/e", "e/part-0000", _ts(3), 1, False, "late"),   # failed re-PUT
+            (5, "/e", "e/part-0001", _ts(1), 1, False, "p"),
+            (5, "/e", "e/part-0001", _ts(1), 2, False, "q"),      # never ok
+        ], ATTEMPTS_SCHEMA)
+        kept = sorted((r["key"], r["ts"].hour, r["try_no"])
+                      for r in compact_attempts(log).collect())
+        assert kept == [("e/part-0000", 1, 1), ("e/part-0000", 3, 1),
+                        ("e/part-0001", 1, 1), ("e/part-0001", 1, 2)]
+        latest_only = sorted((r["key"], r["ts"].hour, r["try_no"])
+                             for r in compact_attempts(log, keep_failures=False).collect())
+        assert latest_only == [("e/part-0000", 1, 1), ("e/part-0000", 3, 1),
+                               ("e/part-0001", 1, 2)]
+
+    def test_compaction_keeps_every_part(self, spark, tmp_path):
+        """Compaction is per (id, key): after a full 3-part segmented
+        upload, status and resume read the compacted log as they read the
+        full one — no part is dropped and re-PUT."""
+        from swiftbulkuploader_spark.plans.upload import (
+            apply_attempts, pending_work, upload, work_units,
+        )
+        from swiftbulkuploader_spark.sources.ingest import ingest_listing
+        from swiftbulkuploader_spark.sources.objectstore import StoreFactory
+
+        src = tmp_path / "src"
+        src.mkdir()
+        (src / "big.bin").write_bytes(bytes(range(256)) * 48)  # 12288 -> 3 parts
+        (src / "small.bin").write_bytes(b"s" * 100)
+        manifest = ingest_listing(spark, str(src)).filter(F.col("error").isNull()).cache()
+        factory = StoreFactory("localfs", root=str(tmp_path / "bucket"))
+        upload(manifest, factory, segment_size=4096, cutoff="src").write.parquet(
+            str(tmp_path / "att"))
+        full = spark.read.parquet(str(tmp_path / "att"))
+        compacted = compact_attempts(full)
+
+        def status(log):
+            return sorted((r["path"], r["uploaded"], r["failed"])
+                          for r in apply_attempts(manifest, log).collect())
+
+        def pending(log):
+            units = work_units(manifest, "src", 4096)
+            return sorted(r["key"] for r in pending_work(units, log).collect())
+
+        assert status(compacted) == status(full)
+        assert all(uploaded for _, uploaded, _ in status(full))
+        assert pending(compacted) == pending(full) == []
+        assert compacted.count() == 4      # one ok row per key
+        manifest.unpersist()
+
 
 class TestAsOf:
     def test_snapshot_before_and_after(self, spark):
