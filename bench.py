@@ -520,7 +520,7 @@ def main() -> None:
     # drift and manufactures per-query false regressions (adjudicated by
     # hand in r7 AND r8). Round-robin spreads each query's samples across
     # the whole run's state trajectory, so the median sees the mix.
-    # Memoized shared bases (_LLOYD_CACHE etc.) behave identically under
+    # Memoized shared bases (memo.py entries) behave identically under
     # either order: the first rep of the consuming query builds, later
     # reps hit, so rep-1 totals carry warmup and the median discards it.
     # Each rep still splits BUILD (Python/Py4J plan construction — the

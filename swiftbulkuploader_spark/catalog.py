@@ -10,9 +10,10 @@ reader via Catalyst (verify with ``df.explain`` — ``PushedFilters`` /
 ``ReadSchema``), which is the 100 TB-scale replacement for the reference's
 DB-side ``WHERE uploaded=0`` (bulkupload.py:357).
 
-Schema inference is paid once per input: ``load_table`` remembers the
-schema Spark inferred for each (session, path, file sizes and mtimes), so
-every later read of the unchanged table launches no footer-reading job.
+Schema inference is paid once per input: ``read_parquet`` keeps the
+schema Spark inferred as a session memo (``memo.py``) whose input is the
+path's file sizes and mtimes, so every later read of the unchanged table
+or artifact launches no footer-reading job.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from swiftbulkuploader_spark.streaming.state_io import _fs_path
+from swiftbulkuploader_spark import memo
 
 # The driver-generated tables (TESTDATA.md).
 TABLES = (
@@ -32,10 +33,6 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# (applicationId, path, fingerprint) -> the schema Spark inferred for it
-_SCHEMAS: dict[tuple, T.StructType] = {}
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -65,42 +62,32 @@ def _ensure_session_defaults(spark: SparkSession) -> None:
         pass
 
 
-def _fingerprint(spark: SparkSession, path: str) -> tuple:
-    """(name, length, mtime) of `path`, or of every file under it, read
-    through the path's own Hadoop FileSystem: rewriting the table in place
-    changes it. A single file (the driver tables' layout) costs one
-    getFileStatus; the recursive listing costs about three times that."""
-    fs, jpath = _fs_path(spark, path)
-    st = fs.getFileStatus(jpath)
-    if not st.isDirectory():
-        return ((path, st.getLen(), st.getModificationTime()),)
-    files = fs.listFiles(jpath, True)
-    out = []
-    while files.hasNext():
-        f = files.next()
-        out.append((f.getPath().toString(), f.getLen(), f.getModificationTime()))
-    return tuple(sorted(out))
+def _inferred_schema(spark: SparkSession, path: str) -> T.StructType:
+    memo.record(spark, path)
+    return spark.read.parquet(path).schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet path with the schema Spark inferred for its current
+    files. Spark's parquet schema inference launches a one-task job to
+    read a footer on every schema-less read (~0.08 s of CPU, paid again by
+    every query build), so the first read of an input infers and memoizes
+    the schema, and later reads pass it back and launch none. The memo's
+    input is the path itself: a table rewritten in place is inferred
+    again, never read with a stale schema. No option — an unchanged file
+    has exactly one schema."""
+    schema = memo.get(spark, "parquet_schema", (path,),
+                      lambda: _inferred_schema(spark, path))
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver table. Spark's parquet schema inference launches a
-    one-task job to read a footer on every schema-less read (~0.08 s of
-    CPU, paid again by every query build), so the first read of an input
-    infers and stores the schema, and later reads pass it back and launch
-    none. The key carries the input's file lengths and mtimes: a table
-    rewritten in place is inferred again, never read with a stale schema.
-    No option — an unchanged file has exactly one schema."""
+    """Read one driver table through ``read_parquet``, which also makes it
+    an input of the memo builds in progress."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     _ensure_session_defaults(spark)
-    path = table_path(sf_dir, name)
-    key = (spark.sparkContext.applicationId, path, _fingerprint(spark, path))
-    schema = _SCHEMAS.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMAS[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) read as long nanos; truncate to micros exactly
         # (integer `div`, no double round-trip) — matches DuckDB's ns->us.

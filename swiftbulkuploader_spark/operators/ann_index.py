@@ -40,7 +40,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from swiftbulkuploader_spark.catalog import load_table
+from swiftbulkuploader_spark import memo
+from swiftbulkuploader_spark.catalog import load_table, read_parquet
 from swiftbulkuploader_spark.operators.similarity import (
     N_PROBE,
     PQ_M,
@@ -82,23 +83,6 @@ def default_index_path(sf_dir: str) -> str:
     )
 
 
-# dataset fingerprints are deterministic per (sf_dir contents); memoized
-# per session so the two artifact queries + any lifecycle query pay the
-# bounded (count, first-row dim) probe once
-_FPRINT_CACHE: dict[tuple, str] = {}
-
-# memoized persisted bases keyed (appId, sf_dir) — the _LLOYD_CACHE
-# pattern (r12 ADVICE #3): per-call persists in repeated bench reps
-# accumulate storage-pool blocks and recreate the eviction pressure
-# round 12 root-caused
-_STALE_BASE_CACHE: dict[tuple, DataFrame] = {}
-_REINDEX_BASE_CACHE: dict[tuple, DataFrame] = {}
-# k-row repaired-centroid frame (x2_reindex_partial): deterministic per
-# (appId, sf_dir), read 3x per call — memoized so the means/flag subtree
-# builds once per session instead of per call (r13-opt)
-_REPAIRED_CACHE: dict[tuple, DataFrame] = {}
-
-
 def dataset_fingerprint(spark: SparkSession, sf_dir: str) -> str:
     """Identity of the data an artifact was trained on (r11 ADVICE #1:
     path existence alone served stale artifacts silently — a regenerated
@@ -108,15 +92,16 @@ def dataset_fingerprint(spark: SparkSession, sf_dir: str) -> str:
     signal — bit_xor(xxhash64(vec_id, embedding)) — is exact, commutative
     across partitions, and catches a same-count/same-dim regeneration the
     r12 shape-only form was blind to (r12 verdict #3 / ADVICE #1). Cost:
-    one map-side-combined scan, memoized per session; retrain paths call
-    invalidate_dataset_fingerprint first so a republish stamps the
-    CURRENT data's identity."""
+    one map-side-combined scan, a session memo whose input is the
+    embeddings table: a rewritten table misses, so a republish always
+    stamps the CURRENT data's identity."""
+    return memo.get(spark, "dataset_fingerprint", (sf_dir,),
+                    lambda: _scan_fingerprint(spark, sf_dir))
+
+
+def _scan_fingerprint(spark: SparkSession, sf_dir: str) -> str:
     import hashlib
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _FPRINT_CACHE.get(key)
-    if hit is not None:
-        return hit
     emb = load_table(spark, sf_dir, "embeddings")
     row = emb.agg(
         F.count(F.lit(1)).alias("n"),
@@ -127,17 +112,7 @@ def dataset_fingerprint(spark: SparkSession, sf_dir: str) -> str:
     ).collect()[0]  # bounded: one 3-scalar row
     raw = (f"{os.path.abspath(sf_dir)}|{row['n']}|{row['d']}|{row['sig']}"
            f"|v{INDEX_FORMAT_VERSION}")
-    fp = hashlib.sha256(raw.encode("utf-8")).hexdigest()
-    _FPRINT_CACHE[key] = fp
-    return fp
-
-
-def invalidate_dataset_fingerprint(spark: SparkSession, sf_dir: str) -> None:
-    """Drop the memoized fingerprint so the next dataset_fingerprint call
-    re-reads the data — called by the retrain/republish paths (a
-    mid-session dataset swap must never stamp a manifest with the cached
-    pre-swap identity)."""
-    _FPRINT_CACHE.pop((spark.sparkContext.applicationId, sf_dir), None)
+    return hashlib.sha256(raw.encode("utf-8")).hexdigest()
 
 
 def _manifest_matches(spark: SparkSession, path: str, fingerprint: str) -> bool:
@@ -150,7 +125,7 @@ def _manifest_matches(spark: SparkSession, path: str, fingerprint: str) -> bool:
     mpath = os.path.join(path, "manifest")
     if not state_path_exists(spark, mpath):
         return False
-    rows = spark.read.parquet(mpath).collect()
+    rows = read_parquet(spark, mpath).collect()
     return len(rows) == 1 and rows[0]["fingerprint"] == fingerprint
 
 
@@ -181,7 +156,6 @@ def save_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     """TRAIN and persist: centroid table, PQ codebooks, and the corpus
     assignment partitioned by cluster. Overwrites any prior artifact at
     `path` (the retrain-and-republish flow)."""
-    invalidate_dataset_fingerprint(spark, sf_dir)
     cents = _ivf_centroids(spark, sf_dir)
     books = _pq_codebooks(spark, sf_dir)
     spark.createDataFrame(
@@ -230,18 +204,19 @@ def save_index(spark: SparkSession, sf_dir: str, path: str) -> None:
 def load_index(spark: SparkSession, path: str) -> AnnIndex:
     """Load the artifact: two bounded collects (k centroid rows, m*k
     codebook rows — the allowlisted quantizer-state class) plus the
-    assignment table as a lazy partitioned frame."""
-    crows = spark.read.parquet(os.path.join(path, "centroids")) \
+    assignment table as a lazy partitioned frame. Every table is read
+    with its memoized schema, so a warm load launches no inference job."""
+    crows = read_parquet(spark, os.path.join(path, "centroids")) \
         .orderBy("cid").collect()
     centroids = [[float(x) for x in r["cv"]] for r in crows]
-    brows = spark.read.parquet(os.path.join(path, "codebooks")) \
+    brows = read_parquet(spark, os.path.join(path, "codebooks")) \
         .orderBy("m", "k").collect()
     n_m = max((r["m"] for r in brows), default=-1) + 1
     books: list[list[list[float]]] = [[] for _ in range(n_m)]
     for r in brows:
         books[r["m"]].append([float(x) for x in r["cv"]])
-    assignments = spark.read.parquet(os.path.join(path, "assignments"))
-    codes = spark.read.parquet(os.path.join(path, "codes"))
+    assignments = read_parquet(spark, os.path.join(path, "assignments"))
+    codes = read_parquet(spark, os.path.join(path, "codes"))
     return AnnIndex(centroids, books, assignments, codes)
 
 
@@ -379,11 +354,9 @@ def x2_index_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid table; the floor window runs over the bounded 2k-row frame
     (BOUNDED_WINDOW_OK class)."""
     cents = _ivf_centroids(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    base = _STALE_BASE_CACHE.get(key)
-    if base is None:
-        fresh = emb.select(
+
+    def build():
+        fresh = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
         drifted = fresh.select(
@@ -392,14 +365,15 @@ def x2_index_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
         both = fresh.withColumn("scenario", F.lit("fresh")).unionByName(
             drifted.withColumn("scenario", F.lit("drifted"))
         )
-        # read twice per call (per-cluster means + sizes); memoized so
-        # repeated bench reps reuse ONE persisted frame instead of
-        # stacking storage-pool blocks per call (r12 ADVICE #3 — the
+        # read twice per call (per-cluster means + sizes); a session
+        # memo, so repeated bench reps reuse ONE persisted frame instead
+        # of stacking storage-pool blocks per call (r12 ADVICE #3 — the
         # eviction pressure class round 12 diagnosed)
-        base = both.withColumn(
+        return both.withColumn(
             "cluster", assign_ivf_cluster("v", cents, round_dp=6)
         ).persist()
-        _STALE_BASE_CACHE[key] = base
+
+    base = memo.get(spark, "staleness_base", (sf_dir,), build)
     means = (
         base.select("scenario", "cluster", F.posexplode("v").alias("pos", "x"))
         .groupBy("scenario", "cluster", "pos")
@@ -557,7 +531,6 @@ def partial_reindex(spark: SparkSession, sf_dir: str,
             "reads the source artifact lazily while writing the "
             f"destination (got {src_path!r} for both)"
         )
-    invalidate_dataset_fingerprint(spark, sf_dir)  # republish = fresh stamp
     idx = load_index(spark, src_path)
     emb = load_table(spark, sf_dir, "embeddings")
     members = idx.assignments.join(
@@ -631,10 +604,10 @@ def partial_reindex(spark: SparkSession, sf_dir: str,
         .write.mode("overwrite").partitionBy("cluster") \
         .parquet(os.path.join(dst_path, "assignments"))
     # codebooks/codes forward-copied; manifest last (publish discipline)
-    spark.read.parquet(os.path.join(src_path, "codebooks")) \
+    read_parquet(spark, os.path.join(src_path, "codebooks")) \
         .coalesce(1).write.mode("overwrite") \
         .parquet(os.path.join(dst_path, "codebooks"))
-    spark.read.parquet(os.path.join(src_path, "codes")) \
+    read_parquet(spark, os.path.join(src_path, "codes")) \
         .write.mode("overwrite").parquet(os.path.join(dst_path, "codes"))
     spark.createDataFrame(
         [(dataset_fingerprint(spark, sf_dir), INDEX_FORMAT_VERSION)],
@@ -643,6 +616,20 @@ def partial_reindex(spark: SparkSession, sf_dir: str,
         os.path.join(dst_path, "manifest")
     )
     return flagged
+
+
+def _reindex_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v, cluster) under the coarse quantizer, read 3x per
+    x2_reindex_partial call (means, sizes, flagged-member reassign): a
+    persisted session memo (r12 ADVICE #3)."""
+    return memo.get(spark, "reindex_base", (sf_dir,), lambda: load_table(
+        spark, sf_dir, "embeddings",
+    ).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    ).withColumn(
+        "cluster",
+        assign_ivf_cluster("v", _ivf_centroids(spark, sf_dir), round_dp=6),
+    ).persist())
 
 
 def x2_reindex_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,20 +659,10 @@ def x2_reindex_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     cents = _ivf_centroids(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    base = _REINDEX_BASE_CACHE.get(key)
-    if base is None:
-        # read 3x per call (means, sizes, flagged-member reassign);
-        # memoized across calls (r12 ADVICE #3)
-        base = emb.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        ).withColumn(
-            "cluster", assign_ivf_cluster("v", cents, round_dp=6)
-        ).persist()
-        _REINDEX_BASE_CACHE[key] = base
-    repaired = _REPAIRED_CACHE.get(key)
-    if repaired is None:
+    base = _reindex_base(spark, sf_dir)
+
+    def repair():
+        base = _reindex_base(spark, sf_dir)
         means = (
             base.select("cluster", F.posexplode("v").alias("pos", "x"))
             .groupBy("cluster", "pos")
@@ -720,10 +697,10 @@ def x2_reindex_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
         # — re-ran the whole means/flag subtree EVERY call (the rule-15
         # per-call re-materialization class; its cent_df LocalRelation
         # also blocks CacheManager plan-dedup, so a bare persist would
-        # stack a copy per call). Memoized per (appId, sf_dir) like the
-        # assignment base above; the per-call corpus work — the flagged-
-        # member re-quantization over `base` — still runs every call.
-        repaired = scored.select(
+        # stack a copy per call). A session memo like the assignment
+        # base above; the per-call corpus work — the flagged-member
+        # re-quantization over `base` — still runs every call.
+        return scored.select(
             "cluster", "n_before", "flagged",
             F.when(F.col("flagged"), F.col("mv")).otherwise(F.col("cv")).alias("ncv"),
             "cv",
@@ -731,7 +708,8 @@ def x2_reindex_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cos_old_new",
             F.round(cosine_similarity(F.col("cv"), F.col("ncv")), 6),
         ).persist()
-        _REPAIRED_CACHE[key] = repaired
+
+    repaired = memo.get(spark, "reindex_repaired", (sf_dir,), repair)
     # re-quantize ONLY flagged members among the flagged new centroids
     flagged_cents = repaired.filter("flagged").select(
         F.col("cluster").alias("nc"), "ncv"

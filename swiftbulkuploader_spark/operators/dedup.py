@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from swiftbulkuploader_spark import memo
 from swiftbulkuploader_spark.catalog import load_table
 from swiftbulkuploader_spark.functions.text import fingerprint, normalize_ws, shingles
 from swiftbulkuploader_spark.functions.vectors import cosine_similarity
@@ -394,12 +395,6 @@ def screen_candidates(pairs: DataFrame, sigs: DataFrame, min_est: float) -> Data
     )
 
 
-# seeded near-dup pair memo (r13-opt): the SAME band-join + verify frame
-# is the pair substrate of x1_dup_clusters — persist once per
-# (session, sf_dir, min_est), the minhash_corpus_pairs discipline
-_MH_NEARDUP_CACHE: dict[tuple, DataFrame] = {}
-
-
 def x1_minhash_neardup(spark: SparkSession, sf_dir: str,
                        min_est: float = 0.25) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline; pairs with Jaccard >= 0.5.
@@ -411,19 +406,18 @@ def x1_minhash_neardup(spark: SparkSession, sf_dir: str,
     screened pairs only, never for every band collision. The screen is
     probabilistic (P(drop a true J=0.5 pair) ~1e-3 per pair, vanishing
     above); pass ``min_est=0`` to verify every band collision exactly.
-    Rows-only check (hash-seed-specific); semantics pinned in tests."""
-    key = (spark.sparkContext.applicationId, sf_dir, min_est)
-    hit = _MH_NEARDUP_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs)
-    cands = minhash_candidates(sigs, min_est=min_est)
-    out = exact_jaccard(cands, sigs).filter(
-        F.col("jaccard") >= 0.5
-    ).persist()
-    _MH_NEARDUP_CACHE[key] = out
-    return out
+    Rows-only check (hash-seed-specific); semantics pinned in tests.
+
+    The pair frame is a persisted session memo (r13-opt): the SAME
+    band-join + verify frame is the pair substrate of x1_dup_clusters."""
+    def build():
+        sigs = minhash_signatures(load_table(spark, sf_dir, "documents"))
+        cands = minhash_candidates(sigs, min_est=min_est)
+        return exact_jaccard(cands, sigs).filter(
+            F.col("jaccard") >= 0.5
+        ).persist()
+
+    return memo.get(spark, "minhash_neardup", (sf_dir, min_est), build)
 
 
 # deterministic overflow-safe remix constants for the ORACLED MinHash twin:
@@ -587,12 +581,10 @@ def minhash_exact_pairs(docs: DataFrame,
 # x1_minhash_exact, x1_ngram_jaccard, x1_lsh_recall_eval and
 # x1_incremental_dedup each re-derived (and eagerly re-checkpointed) the
 # SAME md5-prefix base + 8x4 banding per call — 1-2 s of redundant
-# materialization per bench rep. One (base, bands) pair per
-# (applicationId, sf_dir), the _LLOYD_CACHE discipline; the incremental
-# screen derives its new/frozen sides as doc_id FILTERS of these frames
-# (every stage is per-row, so filter-after == build-on-filtered).
-_MH_CORPUS_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_MH_VERIFIED_CACHE: dict[tuple, DataFrame] = {}
+# materialization per bench rep. One (base, bands) pair per session, a
+# session memo; the incremental screen derives its new/frozen sides as
+# doc_id FILTERS of these frames (every stage is per-row, so
+# filter-after == build-on-filtered).
 
 
 def mh_corpus_parts(spark: SparkSession,
@@ -600,14 +592,11 @@ def mh_corpus_parts(spark: SparkSession,
     """Memoized full-corpus (base, bands): both eagerly localCheckpointed
     so every consumer (and every bench rep after the first) reads
     materialized partitions."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MH_CORPUS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    base = _mh_exact_base(load_table(spark, sf_dir, "documents"))
-    bands = _mh_exact_bands(base).localCheckpoint(eager=True)
-    _MH_CORPUS_CACHE[key] = (base, bands)
-    return base, bands
+    def build():
+        base = _mh_exact_base(load_table(spark, sf_dir, "documents"))
+        return base, _mh_exact_bands(base).localCheckpoint(eager=True)
+
+    return memo.get(spark, "minhash_corpus", (sf_dir,), build)
 
 
 def minhash_corpus_pairs(spark: SparkSession, sf_dir: str,
@@ -616,12 +605,8 @@ def minhash_corpus_pairs(spark: SparkSession, sf_dir: str,
     exact verify memoized/persisted per session — thresholds apply to the
     cached UNthresholded frame on the exact c/den ratio, so every
     ``min_jaccard`` reads one materialization."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    v = _MH_VERIFIED_CACHE.get(key)
-    if v is None:
-        base, bands = mh_corpus_parts(spark, sf_dir)
-        v = _mh_verified_pairs(base, bands).persist()
-        _MH_VERIFIED_CACHE[key] = v
+    v = memo.get(spark, "minhash_verified", (sf_dir,), lambda: _mh_verified_pairs(
+        *mh_corpus_parts(spark, sf_dir)).persist())
     return _mh_threshold(v, min_jaccard)
 
 
@@ -1087,7 +1072,8 @@ def allpairs_prefix_pairs(spark: SparkSession, sf_dir: str,
     x1_allpairs_prefix AND the exact dup-clustering's edge list
     (components.py::x1_dup_clusters_exact), so the 16.6x-measured plan
     exists once."""
-    return _allpairs_impl(spark, sf_dir, tau)
+    return memo.get(spark, "allpairs", (sf_dir, tau),
+                    lambda: _allpairs_impl(spark, sf_dir, tau))
 
 
 def x1_allpairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1124,18 +1110,10 @@ def x1_allpairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # assortativity, k-core, clustering coefficient) — persist + memoize so the
 # posting/prefix/verify joins run once per session, not once per consumer
 # (x8_assortativity alone re-executed them ~3x: 12.3 s benched before this
-# memo). Caching cannot change values; the memo is the _LLOYD_CACHE pattern.
-# keyed on (applicationId, sf_dir, tau) — the cached frame is persisted in
-# its session's block manager, so a stopped-and-recreated SparkSession in
-# the same process must MISS (the _LLOYD_CACHE discipline; r7 advice)
-_ALLPAIRS_CACHE: dict[tuple, DataFrame] = {}
+# memo). Caching cannot change values (allpairs_prefix_pairs holds the memo).
 
 
 def _allpairs_impl(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
-    cache_key = (spark.sparkContext.applicationId, sf_dir, tau)
-    cached = _ALLPAIRS_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.lower(normalize_ws(F.col("text"))), " ")
     base = (
@@ -1199,9 +1177,7 @@ def _allpairs_impl(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
             >= F.lit(tau)
         )
     )
-    out = verified.select("a", "b", "jaccard").persist()
-    _ALLPAIRS_CACHE[cache_key] = out
-    return out
+    return verified.select("a", "b", "jaccard").persist()
 
 
 # ---------------------------------------------------------------------------
@@ -1276,14 +1252,6 @@ def x1_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 SIMHASH_EXACT_BITS = 32
 
 
-# SimHash-twin pair memo (r13-opt, the minhash_corpus_pairs discipline):
-# the deterministic fingerprint+banding+verify frame is consumed by BOTH
-# x1_simhash_exact and x1_simhash_recall_eval — build/persist once per
-# (session, sf_dir) instead of re-running the token explode + 32
-# conditional sums + banding self-join per call.
-_SH_EXACT_CACHE: dict[tuple, DataFrame] = {}
-
-
 def x1_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLED SimHash: the same signed-bit-vote fingerprint + pigeonhole
     banding + hamming verify as ``x1_simhash_neardup``, built on 32-bit
@@ -1298,11 +1266,16 @@ def x1_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk banding (pigeonhole: hamming <= 3 pairs share a chunk) ->
     bit_count(xor) verify on collisions only. 32 bits halve the
     fingerprint's resolution vs the 64-bit form — acceptable for the
-    oracle twin; the production query keeps 64."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SH_EXACT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    oracle twin; the production query keeps 64.
+
+    The pair frame is a persisted session memo (r13-opt): it is consumed
+    by BOTH x1_simhash_exact and x1_simhash_recall_eval, which re-ran the
+    token explode + 32 conditional sums + banding self-join per call."""
+    return memo.get(spark, "simhash_exact", (sf_dir,),
+                    lambda: _simhash_exact_pairs(spark, sf_dir))
+
+
+def _simhash_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = spread(docs).select(
         "doc_id",
@@ -1354,11 +1327,9 @@ def x1_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).cast("int")
-    out = pairs.select("doc_a", "doc_b", ham.alias("hamming")).filter(
+    return pairs.select("doc_a", "doc_b", ham.alias("hamming")).filter(
         F.col("hamming") <= 3
     ).persist()
-    _SH_EXACT_CACHE[key] = out
-    return out
 
 
 def x1_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1397,13 +1368,6 @@ SEMANTIC_TAU = 0.35
 # doubles the pair-join's parallelism (the cluster id is the shuffle key)
 SEMANTIC_N_CENTROIDS = 32
 
-# Memoized persisted coarse-assignment frame (vec_id, vec, nrm, cluster)
-# keyed (appId, sf_dir) — before this the query re-built and re-persisted
-# it per call, stacking a fresh storage-pool copy per bench rep (the r12
-# eviction-pressure class; same fix as _STALE_BASE_CACHE / _QT_CACHE)
-_SEMANTIC_CLUSTERED_CACHE: dict[tuple, DataFrame] = {}
-
-
 def x1_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023's shape): assign
     every embedding to its nearest coarse centroid (the IVF quantizer from
@@ -1438,13 +1402,6 @@ def x1_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from swiftbulkuploader_spark.operators.similarity import _ivf_centroids
 
-    # spread(): the assignment join is compute-dense, and a byte-sized
-    # parquet split would run it in ONE task otherwise
-    emb = spread(
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-        )
-    )
     # adaptive width (similarity.IVF_TARGET_WIDTH): k stays
     # SEMANTIC_N_CENTROIDS at the contract SFs, grows with the corpus —
     # the r11 scale10 probe measured the fixed-k form at 14.2x at 10x
@@ -1458,9 +1415,15 @@ def x1_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _adaptive_nlist(_emb_count(spark, sf_dir), SEMANTIC_N_CENTROIDS)
     cents = _ivf_centroids(spark, sf_dir, n=k)
     dim = len(cents[0])
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    clustered = _SEMANTIC_CLUSTERED_CACHE.get(cache_key)
-    if clustered is None:
+
+    def build():
+        # spread(): the assignment join is compute-dense, and a
+        # byte-sized parquet split would run it in ONE task otherwise
+        emb = spread(
+            load_table(spark, sf_dir, "embeddings").select(
+                "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+            )
+        )
         # centroid norms precomputed driver-side: same sequential sum +
         # sqrt as l2_norm, so the quotient is bit-identical to
         # cosine_similarity's
@@ -1483,7 +1446,7 @@ def x1_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             6,
         )
-        clustered = (
+        return (
             emb.withColumn("nrm", nrm)
             .join(F.broadcast(cdf))  # bounded: SEMANTIC_N_CENTROIDS rows
             .select(
@@ -1503,11 +1466,13 @@ def x1_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             # broadcast-assignment pipeline executes three times per
             # materialization. Same materialize-the-assignment step
             # SemDeDup performs at scale; MEMORY_AND_DISK so it spills
-            # rather than OOMs. Memoized per (appId, sf_dir) so repeated
-            # calls reuse ONE persisted frame (r12 ADVICE #3 class).
+            # rather than OOMs. A session memo, so repeated calls reuse
+            # ONE persisted frame instead of stacking a storage-pool copy
+            # per bench rep (r12 ADVICE #3 class).
             .persist()
         )
-        _SEMANTIC_CLUSTERED_CACHE[cache_key] = clustered
+
+    clustered = memo.get(spark, "semantic_clustered", (sf_dir,), build)
     l, r = clustered.alias("l"), clustered.alias("r")
     pair_cos = F.when(
         F.col("l.nrm") * F.col("r.nrm") > 0,
@@ -1545,27 +1510,26 @@ def x1_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # posting twice in-plan (duplicated-gram aggregation + join probe side),
 # x1_longest_shared_span self-joins it (two more executions), and
 # _gram8_per_doc's (gram, doc) aggregate is the same explode without the
-# position. One persisted (doc_id, p0, gram) frame, memoized per
-# (appId, sf_dir) — the _COPURCHASE_CACHE discipline — serves every
-# reference; downstream join strategies are untouched (the rule-12 merge
+# position. One persisted (doc_id, p0, gram) frame, a session memo,
+# serves every reference; downstream join strategies are untouched (the rule-12 merge
 # pins stay — the probe-measured OOM risk concerned join BUILD sides,
 # and the cache itself is spillable MEMORY_AND_DISK bounded by the
 # corpus gram count, the same class as the containment-pairs gg cache).
-_GRAM_POS_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _gram_pos8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, p0, gram): 0-based start positions of literal lowercased
     word-8-grams, for documents with >= 8 tokens — one shingling pass per
-    session, persisted, shared by the span-signal family (see
-    _GRAM_POS_CACHE note above)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GRAM_POS_CACHE.get(key)
-    if hit is not None:
-        return hit
+    session, persisted, shared by the span-signal family (see the note
+    above)."""
+    return memo.get(spark, "gram_pos8", (sf_dir,),
+                    lambda: _gram_pos8_frame(spark, sf_dir))
+
+
+def _gram_pos8_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.split(F.lower(normalize_ws(F.col("text"))), " ")
-    out = (
+    return (
         # spread(): the interpreted-HOF shingling is compute-dense and a
         # small parquet file arrives as one partition
         spread(docs)
@@ -1576,8 +1540,6 @@ def _gram_pos8(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    _GRAM_POS_CACHE[key] = out
-    return out
 
 
 def _gram8_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2808,7 +2770,7 @@ SWEEP_TAUS = (0.5, 0.6, 0.7, 0.8, 0.9)
 def x1_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup THRESHOLD SWEEP: pair and affected-doc counts at Jaccard
     cutoffs 0.5..0.9, from ONE pass over the shared exact-Jaccard pair
-    frame (_ALLPAIRS_CACHE, tau=0.5 — every sweep point is a filter of
+    frame (allpairs_prefix_pairs, tau=0.5 — every sweep point is a filter of
     it) — the tuning curve read before fixing a dedup threshold: where
     the pair count knees is where near-dups separate from topical
     similarity. n_docs_affected counts distinct docs in >= tau pairs
@@ -2818,7 +2780,7 @@ def x1_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoints, one distinct + two aggregates. Jaccard is an exact integer
     ratio, each cutoff a DOUBLE literal — the >= decision is bit-identical
     across engines."""
-    pairs = _allpairs_impl(spark, sf_dir, tau=0.5)  # (a, b, jaccard)
+    pairs = allpairs_prefix_pairs(spark, sf_dir, tau=0.5)  # (a, b, jaccard)
     taus = F.explode(
         F.array(*[F.lit(float(t)) for t in SWEEP_TAUS])
     ).alias("tau")
@@ -3325,7 +3287,7 @@ def x1_longest_shared_span(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError(
             f"x1_longest_shared_span shares the fixed-width-8 gram-position "
             f"substrate (_gram_pos8); LSS_K={LSS_K} requires parameterizing "
-            "_gram_pos8/_GRAM_POS_CACHE by gram width"
+            "_gram_pos8 by gram width"
         )
     return longest_shared_spans(
         load_table(spark, sf_dir, "documents"),

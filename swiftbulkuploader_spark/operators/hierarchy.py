@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from swiftbulkuploader_spark import memo
 from swiftbulkuploader_spark.catalog import load_table
 
 # Spark and DuckDB differ only in the integer-division operator spelling
@@ -93,13 +94,12 @@ def x8_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pr.select("node", "pr")
 
 
-# interaction-graph memo (r13-opt, the _COPURCHASE_CACHE discipline):
-# x8_pagerank, x8_pagerank_converged and x8_hits all derive from the same
+# interaction-graph session memos (r13-opt): x8_pagerank,
+# x8_pagerank_converged and x8_hits all derive from the same
 # deterministic user<->item pair frame, and the graph tables behind the
 # PR rounds (edges/deg/nodes/n) are 3 eager checkpoints + 1 count — four
-# driver-blocking jobs that ran once PER CALL. Build once per
-# (session, sf_dir); checkpointed frames are valid for the session's life.
-_INTERACT_CACHE: dict[tuple, tuple] = {}
+# driver-blocking jobs that ran once PER CALL. Build once per session;
+# checkpointed frames are valid for the session's life.
 
 
 def _interaction_pairs(spark, sf_dir: str):
@@ -108,23 +108,16 @@ def _interaction_pairs(spark, sf_dir: str):
     symmetrized PR edge list is built from."""
     from pyspark.sql import functions as F
 
-    key = ("pairs", spark.sparkContext.applicationId, sf_dir)
-    hit = _INTERACT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    events = load_table(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
-    pairs = (
-        events.select(F.col("user_id").alias("u"), k.alias("item"))
+    return memo.get(spark, "interaction_pairs", (sf_dir,), lambda: (
+        load_table(spark, sf_dir, "events").select(F.col("user_id").alias("u"), k.alias("item"))
         # item >= 0 keeps the encoding below injective: a negative item key
         # (never present in the fixture, but possible in arbitrary JSON)
         # would map into the user id space and silently fuse two nodes
         .filter(F.col("item").isNotNull() & (F.col("item") >= 0))
         .distinct()
         .localCheckpoint(eager=True)
-    )
-    _INTERACT_CACHE[key] = pairs
-    return pairs
+    ))
 
 
 def _interaction_edges(spark, sf_dir: str):
@@ -132,35 +125,29 @@ def _interaction_edges(spark, sf_dir: str):
     re-execute their subtree otherwise; memoized per session)."""
     from pyspark.sql import functions as F
 
-    key = ("edges", spark.sparkContext.applicationId, sf_dir)
-    hit = _INTERACT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pairs = _interaction_pairs(spark, sf_dir)
     # non-negative items live in NEGATIVE id space (-1-item): disjoint from
     # user ids at ANY scale, where a fixed +10000 offset would collide once
     # user_id >= 10000 and silently fuse two nodes' edges and rank
     item_node = -(F.col("item") + F.lit(1))
-    edges = (
-        pairs.select(F.col("u").alias("src"), item_node.alias("dst"))
-        .unionByName(pairs.select(item_node.alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    _INTERACT_CACHE[key] = edges
-    return edges
+
+    def build():
+        pairs = _interaction_pairs(spark, sf_dir)
+        return (
+            pairs.select(F.col("u").alias("src"), item_node.alias("dst"))
+            .unionByName(pairs.select(item_node.alias("src"), F.col("u").alias("dst")))
+            .localCheckpoint(eager=True)
+        )
+
+    return memo.get(spark, "interaction_edges", (sf_dir,), build)
 
 
 def _interaction_graph_tables(spark, sf_dir: str):
     """(edges, deg, nodes, n) for the interaction graph, memoized."""
-    key = ("graph", spark.sparkContext.applicationId, sf_dir)
-    hit = _INTERACT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    edges = _interaction_edges(spark, sf_dir)
-    deg, nodes, n = _graph_tables(edges)
-    out = (edges, deg, nodes, n)
-    _INTERACT_CACHE[key] = out
-    return out
+    def build():
+        edges = _interaction_edges(spark, sf_dir)
+        return (edges, *_graph_tables(edges))
+
+    return memo.get(spark, "interaction_graph", (sf_dir,), build)
 
 
 def _graph_tables(edges):

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from swiftbulkuploader_spark import memo
 from swiftbulkuploader_spark.catalog import load_table
 from swiftbulkuploader_spark.multimodal.media import (
     decode_image_meta,
@@ -758,23 +759,16 @@ def synth_phash_media(docs: DataFrame) -> DataFrame:
 
 # Full-corpus pHash pair memo (round 13): the pair frame is consumed by
 # x9_phash_dedup AND the composed x10_multimodal_manifest — one banded
-# join + verify per (appId, sf_dir), the _MH_CORPUS_CACHE discipline
-# (CLAUDE.md 11a: deterministic derived frames consumed by several
-# queries get persist + memoize).
-_PHASH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
+# join + verify per session (CLAUDE.md 11a: deterministic derived frames
+# consumed by several queries get persist + memoize).
 
 
 def phash_corpus_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (a, b, hamming) pHash near-dup pairs over the rendered
     image corpus — the body of x9_phash_dedup, factored so composed
     pipelines reuse ONE persisted materialization."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PHASH_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    pairs = _phash_pairs_build(spark, sf_dir).persist()
-    _PHASH_PAIRS_CACHE[key] = pairs
-    return pairs
+    return memo.get(spark, "phash_pairs", (sf_dir,),
+                    lambda: _phash_pairs_build(spark, sf_dir).persist())
 
 
 def x9_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

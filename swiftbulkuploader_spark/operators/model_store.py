@@ -39,7 +39,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from swiftbulkuploader_spark.catalog import load_table
+from swiftbulkuploader_spark import memo
+from swiftbulkuploader_spark.catalog import load_table, read_parquet
 
 MODEL_FORMAT_VERSION = 2  # v2: content-signal fingerprint (r12 verdict #3)
 
@@ -53,10 +54,6 @@ def default_model_path(sf_dir: str) -> str:
         f"swiftbulkuploader_models_v{MODEL_FORMAT_VERSION}",
         tag,
     )
-
-
-# fingerprints are deterministic per (sf_dir, table); memoized per session
-_FPRINT_CACHE: dict[tuple, str] = {}
 
 
 def _content_signal(df, table: str):
@@ -81,32 +78,20 @@ def table_fingerprint(spark: SparkSession, sf_dir: str, table: str) -> str:
     """Identity of the training data: sha256 over (absolute sf_dir,
     table, row count, a content signal, format version). The content
     signal (see _content_signal) closes the same-count-regeneration blind
-    spot of the r12 count-only form; memoized per session — retrain paths
-    call invalidate_fingerprint first so a republish always stamps the
-    CURRENT data's identity."""
-    key = (spark.sparkContext.applicationId, sf_dir, table)
-    hit = _FPRINT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    spot of the r12 count-only form. A session memo whose input is the
+    table it scans: a rewritten table misses, so a republish always
+    stamps the CURRENT data's identity."""
+    return memo.get(spark, "table_fingerprint", (sf_dir, table),
+                    lambda: _scan_fingerprint(spark, sf_dir, table))
+
+
+def _scan_fingerprint(spark: SparkSession, sf_dir: str, table: str) -> str:
     df = load_table(spark, sf_dir, table)
     n = df.count()
     sig = _content_signal(df, table).collect()[0]["sig"]  # bounded: 1 row
     raw = (f"{os.path.abspath(sf_dir)}|{table}|{n}|{sig}"
            f"|v{MODEL_FORMAT_VERSION}")
-    fp = hashlib.sha256(raw.encode("utf-8")).hexdigest()
-    _FPRINT_CACHE[key] = fp
-    return fp
-
-
-def invalidate_fingerprint(spark: SparkSession, sf_dir: str,
-                           table: str) -> None:
-    """Drop the memoized fingerprint so the next table_fingerprint call
-    re-reads the data — called by every save_* retrain path (a
-    mid-session dataset swap must republish against the swapped data's
-    identity, not the cached one)."""
-    _FPRINT_CACHE.pop(
-        (spark.sparkContext.applicationId, sf_dir, table), None
-    )
+    return hashlib.sha256(raw.encode("utf-8")).hexdigest()
 
 
 def _manifest_matches(spark: SparkSession, mdir: str, fingerprint: str) -> bool:
@@ -115,7 +100,7 @@ def _manifest_matches(spark: SparkSession, mdir: str, fingerprint: str) -> bool:
     mpath = os.path.join(mdir, "manifest")
     if not state_path_exists(spark, mpath):
         return False
-    rows = spark.read.parquet(mpath).collect()
+    rows = read_parquet(spark, mpath).collect()
     return len(rows) == 1 and rows[0]["fingerprint"] == fingerprint
 
 
@@ -138,7 +123,6 @@ def save_bpe(spark: SparkSession, sf_dir: str, mdir: str) -> None:
     table; manifest last."""
     from swiftbulkuploader_spark.operators.textops import _bpe_merges
 
-    invalidate_fingerprint(spark, sf_dir, "documents")
     merges = _bpe_merges(spark, sf_dir)
     spark.createDataFrame(
         [(int(r), x, y, m, int(c)) for r, x, y, m, c in merges],
@@ -151,7 +135,7 @@ def save_bpe(spark: SparkSession, sf_dir: str, mdir: str) -> None:
 
 def load_bpe(spark: SparkSession, mdir: str) -> list[tuple]:
     """Bounded collect: BPE_MERGES rows, rank order restored."""
-    rows = spark.read.parquet(os.path.join(mdir, "merges")) \
+    rows = read_parquet(spark, os.path.join(mdir, "merges")) \
         .orderBy("rank").collect()
     return [(r["rank"], r["x"], r["y"], r["merged"], r["cnt"]) for r in rows]
 
@@ -188,7 +172,6 @@ def x3_bpe_encode_from_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def save_quality_model(spark: SparkSession, sf_dir: str, mdir: str) -> None:
     from swiftbulkuploader_spark.operators.textops import _qt_train
 
-    invalidate_fingerprint(spark, sf_dir, "documents")
     _feats, w = _qt_train(spark, sf_dir)
     spark.createDataFrame(
         [(j, float(wj)) for j, wj in enumerate(w)], "j int, w double",
@@ -199,7 +182,7 @@ def save_quality_model(spark: SparkSession, sf_dir: str, mdir: str) -> None:
 
 
 def load_quality_model(spark: SparkSession, mdir: str) -> list[float]:
-    rows = spark.read.parquet(os.path.join(mdir, "weights")) \
+    rows = read_parquet(spark, os.path.join(mdir, "weights")) \
         .orderBy("j").collect()
     return [float(r["w"]) for r in rows]
 
@@ -235,7 +218,6 @@ def x3_quality_model_from_artifact(spark: SparkSession,
 def save_pca(spark: SparkSession, sf_dir: str, mdir: str) -> None:
     from swiftbulkuploader_spark.operators.similarity import _pca_power
 
-    invalidate_fingerprint(spark, sf_dir, "embeddings")
     mu, v, nrm, n = _pca_power(spark, sf_dir)
     spark.createDataFrame(
         [(p, float(mu[p]), float(v[p])) for p in range(len(mu))],
@@ -250,9 +232,9 @@ def save_pca(spark: SparkSession, sf_dir: str, mdir: str) -> None:
 
 def load_pca(spark: SparkSession,
              mdir: str) -> tuple[list[float], list[float], float, int]:
-    brows = spark.read.parquet(os.path.join(mdir, "basis")) \
+    brows = read_parquet(spark, os.path.join(mdir, "basis")) \
         .orderBy("pos").collect()  # bounded: one row per dimension
-    srow = spark.read.parquet(os.path.join(mdir, "stats")).collect()[0]
+    srow = read_parquet(spark, os.path.join(mdir, "stats")).collect()[0]
     return (
         [float(r["m"]) for r in brows],
         [float(r["v"]) for r in brows],

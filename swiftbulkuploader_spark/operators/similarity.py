@@ -26,6 +26,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from swiftbulkuploader_spark import memo
 from swiftbulkuploader_spark.catalog import load_table
 from swiftbulkuploader_spark.functions.vectors import cosine_similarity, dot_product
 
@@ -76,53 +77,36 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
     return sig
 
 
-# query-vector memo (r13-opt, the _PROBE_CACHE pattern): 16 x2 query
-# builders fetch the same anchor embedding — one bounded 1-row driver job
-# per session instead of one per call per bench rep
-_QVEC_CACHE: dict[tuple, list[float]] = {}
-
-# corpus vector count + anchor label memos (same class: deterministic
-# per-(session, sf_dir) scalars fetched by several query builders per rep)
-_EMB_N_CACHE: dict[tuple, int] = {}
-_QLABEL_CACHE: dict[tuple, str] = {}
-# query-document token set (x2_hybrid_search's lexical anchor): same class
-_QDOC_TOKS_CACHE: dict[tuple, list[str]] = {}
+# corpus count, anchor label and anchor vector are session memos
+# (r13-opt): 16 x2 query builders fetch the same anchor embedding — one
+# bounded 1-row driver job per session instead of one per call per rep
 
 
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _EMB_N_CACHE.get(key)
-    if hit is None:
-        hit = load_table(spark, sf_dir, "embeddings").count()
-        _EMB_N_CACHE[key] = hit
-    return hit
+    return memo.get(spark, "emb_count", (sf_dir,),
+                    lambda: load_table(spark, sf_dir, "embeddings").count())
 
 
 def _query_label(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _QLABEL_CACHE.get(key)
-    if hit is None:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         qrow = emb.filter(F.col("vec_id") == 0).select("label").first()
         if qrow is None:
             raise ValueError("query vec_id=0 not found")
-        hit = qrow["label"]
-        _QLABEL_CACHE[key] = hit
-    return hit
+        return qrow["label"]
+
+    return memo.get(spark, "query_label", (sf_dir,), build)
 
 
 def _query_vector(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[float]:
-    key = (spark.sparkContext.applicationId, sf_dir, vec_id)
-    hit = _QVEC_CACHE.get(key)
-    if hit is not None:
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings")
-    row = emb.filter(F.col("vec_id") == vec_id).select("embedding").first()
-    if row is None:
-        raise ValueError(f"query vec_id={vec_id} not found")
-    out = [float(v) for v in row[0]]
-    _QVEC_CACHE[key] = out
-    return out
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings")
+        row = emb.filter(F.col("vec_id") == vec_id).select("embedding").first()
+        if row is None:
+            raise ValueError(f"query vec_id={vec_id} not found")
+        return [float(v) for v in row[0]]
+
+    return memo.get(spark, "query_vector", (sf_dir, vec_id), build)
 
 
 def x2_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -310,34 +294,25 @@ def _maybe_round(col: Column, dp: int | None) -> Column:
     return F.round(col, dp) if dp is not None else col
 
 
-# (applicationId, sf_dir, n) -> centroid list; the fetch is a bounded
-# n-row collect but still a driver Spark job (~0.1-1 s warm, the rule-10
-# class) and the quantizer is deterministic — memoize it like the other
-# scalar bases (_QVEC_CACHE / _PQ_BOOKS_CACHE). ~10 call sites across
-# the IVF/PQ/semantic families re-ran it per query before (r13-opt).
-_CENTS_CACHE: dict[tuple, list[list[float]]] = {}
-
-
 def _ivf_centroids(spark: SparkSession, sf_dir: str,
                    n: int = N_CENTROIDS) -> list[list[float]]:
     """Deterministic coarse quantizer: the first ``n`` vectors by id
     (a k-means init; at scale you'd refine with pyspark.ml KMeans — the
-    query path is identical either way). Memoized per
-    (application, sf_dir, n) — see _CENTS_CACHE."""
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    hit = _CENTS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = (
-        emb.filter(F.col("vec_id") < n)
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    out = [[float(v) for v in r[0]] for r in rows]
-    _CENTS_CACHE[key] = out
-    return out
+    query path is identical either way). The fetch is a bounded n-row
+    collect but still a driver Spark job (~0.1-1 s warm, the rule-10
+    class), so it is a session memo: ~10 call sites across the
+    IVF/PQ/semantic families re-ran it per query before (r13-opt)."""
+    def build():
+        rows = (
+            load_table(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") < n)
+            .orderBy("vec_id")
+            .select("embedding")
+            .collect()
+        )
+        return [[float(v) for v in r[0]] for r in rows]
+
+    return memo.get(spark, "ivf_centroids", (sf_dir, n), build)
 
 
 def _py_cos(a: list[float], b: list[float]) -> float:
@@ -345,12 +320,6 @@ def _py_cos(a: list[float], b: list[float]) -> float:
     num = sum(x * y for x, y in zip(a, b))
     den = (sum(x * x for x in a) ** 0.5) * (sum(y * y for y in b) ** 0.5)
     return num / den if den else -2.0
-
-
-# (applicationId, centroids, q, n_probe) -> probe id list; the pick is a
-# bounded k-row Spark job, memoized so the IVF family pays it once per
-# session per quantizer (the _LLOYD_CACHE discipline)
-_PROBE_CACHE: dict[tuple, list[int]] = {}
 
 
 def _probe_pick(spark: SparkSession, centroids: list[list[float]],
@@ -365,37 +334,30 @@ def _probe_pick(spark: SparkSession, centroids: list[list[float]],
     systematic rounding-mode divergence is gone; what remains is the same
     summation-order-ulp-at-a-boundary residual every rounded comparison
     in this module carries. Bounded collect: k centroid rows (PLANS.md
-    allowlist class)."""
-    key = (
-        spark.sparkContext.applicationId,
-        tuple(tuple(c) for c in centroids),
-        tuple(q),
-        n_probe,
-    )
-    cached = _PROBE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    qcol = _lit_vec(q)
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cid int, cv array<double>",
-    )
-    rows = (
-        cent_df.select(
-            "cid",
-            F.round(
-                F.coalesce(cosine_similarity(F.col("cv"), qcol),
-                           F.lit(-2.0)),
-                6,
-            ).alias("cos"),
+    allowlist class), memoized per (centroids, q, n_probe) so the IVF
+    family pays it once per session per quantizer."""
+    def build():
+        cent_df = spark.createDataFrame(
+            [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+            "cid int, cv array<double>",
         )
-        .orderBy(F.col("cos").desc(), F.col("cid").desc())
-        .limit(n_probe)
-        .collect()
-    )
-    out = [r["cid"] for r in rows]
-    _PROBE_CACHE[key] = out
-    return out
+        rows = (
+            cent_df.select(
+                "cid",
+                F.round(
+                    F.coalesce(cosine_similarity(F.col("cv"), _lit_vec(q)),
+                               F.lit(-2.0)),
+                    6,
+                ).alias("cos"),
+            )
+            .orderBy(F.col("cos").desc(), F.col("cid").desc())
+            .limit(n_probe)
+            .collect()
+        )
+        return [r["cid"] for r in rows]
+
+    args = (tuple(tuple(c) for c in centroids), tuple(q), n_probe)
+    return memo.get(spark, "probe_pick", args, build)
 
 
 def ivf_search(emb: DataFrame, centroids: list[list[float]], q: list[float],
@@ -450,14 +412,13 @@ def x2_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 LLOYD_ROUNDS = 2
 
-# Shared-base cache for the refined coarse quantizer (CLAUDE.md rule 5,
+# The refined coarse quantizer is a session memo (CLAUDE.md rule 5,
 # extended round 7): at scale the quantizer is trained ONCE and reused by
 # every probe query, so retraining 2 Lloyd rounds per invocation
 # (x2_ivf_kmeans_topk, then AGAIN inside x2_ann_recall) was pure wasted
-# work. Keyed by (Spark application, input-plan semantic hash, k, rounds);
-# the refinement is fully deterministic (first-k seed, fixed rounds,
-# 6-dp-quantized arithmetic), so caching cannot change any compared value.
-_LLOYD_CACHE: dict[tuple, list[list[float]]] = {}
+# work. Keyed by (input plan, k, rounds); the refinement is fully
+# deterministic (first-k seed, fixed rounds, 6-dp-quantized arithmetic),
+# so caching cannot change any compared value.
 
 
 def lloyd_refined_centroids(emb: DataFrame, k: int = N_CENTROIDS,
@@ -484,7 +445,7 @@ def lloyd_refined_centroids(emb: DataFrame, k: int = N_CENTROIDS,
     Returns the refined centroids as a plain list — a BOUNDED driver
     collect (<= k rows of dim doubles, the allowlisted scalar/centroid
     class) feeding the shared `ivf_search` literal path. The list is
-    memoized per (application, input plan, k, rounds) — see _LLOYD_CACHE.
+    memoized per (session, input plan, k, rounds) — see the note above.
 
     Rounding-edge triage note (round-7, from ADVICE): the 6-dp rounding of
     engine-computed doubles (F.avg centroid means, cosine argmax inputs)
@@ -495,11 +456,12 @@ def lloyd_refined_centroids(emb: DataFrame, k: int = N_CENTROIDS,
     ever mismatches in a future round, triage as a rounding-edge first
     (diff the per-round centroid tables between engines), not a logic bug."""
     spark = emb.sparkSession
-    cache_key = (spark.sparkContext.applicationId, emb.semanticHash(),
-                 k, rounds)
-    cached = _LLOYD_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
+    return memo.get(spark, "lloyd", (emb, k, rounds),
+                    lambda: _lloyd_train(spark, emb, k, rounds))
+
+
+def _lloyd_train(spark: SparkSession, emb: DataFrame, k: int,
+                 rounds: int) -> list[list[float]]:
     # read 2x per Lloyd round (assignment + mean join) plus the seed scan:
     # plan-keyed persist so the cast projection runs once per session
     vecs = emb.select(
@@ -550,10 +512,8 @@ def lloyd_refined_centroids(emb: DataFrame, k: int = N_CENTROIDS,
             .localCheckpoint(eager=True)
         )
     rows = cents.orderBy("cid").collect()  # bounded: <= k centroid rows
-    out = [[float(x) for x in r["cv"]] for r in rows]
-    _LLOYD_CACHE[cache_key] = out
-    vecs.unpersist()  # refined centroids cached; the cast projection is done
-    return out
+    vecs.unpersist()  # refined centroids memoized; the cast projection is done
+    return [[float(x) for x in r["cv"]] for r in rows]
 
 
 def x2_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -571,7 +531,7 @@ def x2_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment pass and one (cluster, pos)-keyed mean shuffle (rows x dim,
     map-side combined) — the standard distributed Lloyd's; the refined
     centroid table stays k x dim doubles, driver-bounded. The refinement
-    runs ONCE per session/input (memoized in _LLOYD_CACHE, round 7):
+    runs ONCE per session/input (memoized by lloyd_refined_centroids, round 7):
     repeat invocations — and x2_ann_recall's second call — reuse the
     trained quantizer, mirroring production where the coarse quantizer is
     trained once and served to every probe query."""
@@ -640,14 +600,15 @@ def x2_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     toks = F.array_distinct(F.split(F.lower(normalize_ws(F.col("text"))), " "))
-    qkey = (spark.sparkContext.applicationId, sf_dir)
-    qtoks = _QDOC_TOKS_CACHE.get(qkey)
-    if qtoks is None:
-        qrow = docs.filter(F.col("doc_id") == 0).select(toks.alias("t")).first()
+
+    def query_tokens():
+        qrow = load_table(spark, sf_dir, "documents").filter(
+            F.col("doc_id") == 0).select(toks.alias("t")).first()
         if qrow is None:
             raise ValueError("query doc_id=0 not found")
-        qtoks = [str(t) for t in qrow["t"]]
-        _QDOC_TOKS_CACHE[qkey] = qtoks
+        return [str(t) for t in qrow["t"]]
+
+    qtoks = memo.get(spark, "query_doc_tokens", (sf_dir,), query_tokens)
     qtok = F.array(*[F.lit(t) for t in qtoks])
     qvec = _lit_vec(_query_vector(spark, sf_dir, 0))
 
@@ -931,16 +892,14 @@ PQ_DSUB = 8   # dims per subspace (8 x 8 = 64)
 PQ_K = 16     # codebook entries per subspace -> 4-bit codes, 8 B/vector
 
 
-# r13-opt: the codebook collect is a deterministic session scalar (the
-# _LLOYD_CACHE discipline) — before memoization every PQ query re-ran
-# the bounded 16-row collect per call; and the full-table PQ assignment
-# (_pq_best_frame with the default embeddings input) is the identical
-# broadcast-join + min-struct pipeline for x2_pq_codes, x2_pq_topk,
-# x2_pq_distortion and ensure_index — persist + memoize it once per
-# (appId, sf_dir). The pruned-input form (x2_ivf_pq_topk) bypasses the
-# cache: its substrate is the probe-filtered subset, not the corpus.
-_PQ_BOOKS_CACHE: dict[tuple, list] = {}
-_PQ_BEST_CACHE: dict[tuple, DataFrame] = {}
+# r13-opt: the codebook collect is a deterministic session memo —
+# before memoization every PQ query re-ran the bounded 16-row collect per
+# call; and the full-table PQ assignment (_pq_best_frame with the default
+# embeddings input) is the identical broadcast-join + min-struct pipeline
+# for x2_pq_codes, x2_pq_topk, x2_pq_distortion and ensure_index —
+# persist + memoize it once per session. The pruned-input form
+# (x2_ivf_pq_topk) bypasses the memo: its substrate is the
+# probe-filtered subset, not the corpus.
 
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
@@ -948,23 +907,20 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     vectors' subvectors (deterministic init, same discipline as
     _ivf_centroids; a production build refines with per-subspace k-means —
     the encode/search path is identical either way). Bounded collect:
-    PQ_K rows, memoized per session (_PQ_BOOKS_CACHE)."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PQ_BOOKS_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = (
-        emb.filter(F.col("vec_id") < PQ_K).orderBy("vec_id")
-        .select("embedding").collect()
-    )
-    vecs = [[float(v) for v in r[0]] for r in rows]
-    out = [
-        [vec[m * PQ_DSUB:(m + 1) * PQ_DSUB] for vec in vecs]
-        for m in range(PQ_M)
-    ]
-    _PQ_BOOKS_CACHE[cache_key] = out
-    return out
+    PQ_K rows, memoized per session."""
+    def build():
+        rows = (
+            load_table(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") < PQ_K).orderBy("vec_id")
+            .select("embedding").collect()
+        )
+        vecs = [[float(v) for v in r[0]] for r in rows]
+        return [
+            [vec[m * PQ_DSUB:(m + 1) * PQ_DSUB] for vec in vecs]
+            for m in range(PQ_M)
+        ]
+
+    return memo.get(spark, "pq_codebooks", (sf_dir,), build)
 
 
 def _pq_sqdist_val(q: list[float], offset: int, cent: list[float]) -> float:
@@ -1024,21 +980,17 @@ def _pq_best_frame(spark: SparkSession, sf_dir: str, books,
     ties go to the smaller code (field-order comparison), matching the
     generated oracle's ORDER BY d, k.
 
-    The full-table form (emb=None) is memoized + persisted per
-    (appId, sf_dir) — see _PQ_BEST_CACHE above; an explicit emb input
-    (the IVF-pruned subset) always computes fresh."""
-    full_table = emb is None
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if full_table:
-        cached = _PQ_BEST_CACHE.get(cache_key)
-        if cached is not None:
-            return cached
+    The full-table form (emb=None) is memoized + persisted per session
+    (see the note above); an explicit emb input (the IVF-pruned subset)
+    always computes fresh."""
+    if emb is None:
+        return memo.get(spark, "pq_best", (sf_dir,), lambda: _pq_best_frame(
+            spark, sf_dir, books, load_table(spark, sf_dir, "embeddings"),
+        ).persist())
     cb = spark.createDataFrame(
         [(m, k, books[m][k]) for m in range(PQ_M) for k in range(PQ_K)],
         "m int, k int, c array<double>",
     )
-    if emb is None:
-        emb = load_table(spark, sf_dir, "embeddings")
     joined = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     ).join(F.broadcast(cb))
@@ -1052,16 +1004,12 @@ def _pq_best_frame(spark: SparkSession, sf_dir: str, books,
     scored = joined.select(
         "vec_id", "m", "k", F.round(dist, 6).alias("d")
     )
-    out = scored.groupBy("vec_id").agg(
+    return scored.groupBy("vec_id").agg(
         *[
             F.min(F.when(F.col("m") == mm, F.struct("d", "k"))).alias(f"b{mm}")
             for mm in range(PQ_M)
         ]
     )
-    if full_table:
-        out = out.persist()
-        _PQ_BEST_CACHE[cache_key] = out
-    return out
 
 
 def x2_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1152,7 +1100,7 @@ def x2_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13-opt: the per-row PQ code depends only on the row's own
     # embedding + the codebook, so encode-then-filter == filter-then-
     # encode — ride the SHARED memoized full-table code frame
-    # (_PQ_BEST_CACHE, the x2_pq_codes substrate) and semi-restrict it
+    # (the pq_best memo, the x2_pq_codes substrate) and semi-restrict it
     # to the probed ids, instead of re-running the broadcast-codebook
     # encode over the pruned subset per call. This also matches the
     # at-scale serve path more closely (codes are PRE-encoded at
@@ -2117,8 +2065,8 @@ def x2_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed centroid-to-centroid so it stays O(n*k + k^2), never the
     O(n^2) full silhouette).
 
-    Reuses the SESSION-CACHED quantizer (`lloyd_refined_centroids` /
-    _LLOYD_CACHE) — training is not repeated; this query costs one
+    Reuses the SESSION-MEMOIZED quantizer (`lloyd_refined_centroids`)
+    — training is not repeated; this query costs one
     bounded k-row broadcast assignment pass + a k x k centroid table
     cross join (16 x 16 — driver-trivial at any corpus scale). The oracle
     replays the full fixed-round Lloyd chain (the x2_ivf_kmeans_topk CTE
@@ -2288,11 +2236,6 @@ ORACLES["x2_cluster_quality"] = _cluster_quality_oracle_sql()
 
 PCA_ROUNDS = 2  # fixed budget: the Lloyd/quality-train graduation recipe
 
-# (mean, loading, ||w||, n): deterministic per sf_dir -> train once, share
-# between the model report and the projector (_LLOYD_CACHE memo pattern)
-_PCA_CACHE: dict[str, tuple[list[float], list[float], float, int]] = {}
-
-
 def _pca_power(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[float], float, int]:
     """Top principal component of the embedding table by PCA_ROUNDS of
     power iteration on the centered data, without ever materializing the
@@ -2307,10 +2250,15 @@ def _pca_power(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[floa
 
     The seed v0 = 1/8 per dimension is exactly representable for dim=64
     (1/sqrt(64)); a general dim would seed with engine-rounded values.
+
+    (mean, loading, ||w||, n) is deterministic per input: a session memo
+    shared between the model report and the projector.
     """
-    cached = _PCA_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
+    return memo.get(spark, "pca_power", (sf_dir,),
+                    lambda: _pca_train(spark, sf_dir))
+
+
+def _pca_train(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[float], float, int]:
     emb = load_table(spark, sf_dir, "embeddings")
     rows = emb.select(F.col("embedding").cast("array<double>").alias("x"))
     mu_rows = (
@@ -2351,9 +2299,7 @@ def _pca_power(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[floa
         )
         v = [float(r["v"]) for r in vrows]
         norm = float(vrows[0]["nrm"])
-    out = (mu, v, norm, int(n))
-    _PCA_CACHE[sf_dir] = out
-    return out
+    return (mu, v, norm, int(n))
 
 
 def x2_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2380,7 +2326,7 @@ def x2_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     report the residual norm sqrt(||x - mu||^2 - score^2) — the per-vector
     'how much does one direction explain me' audit used for outlier
     screening and for the all-but-the-top correction. Reuses the cached
-    quantizer (_PCA_CACHE), so the projection itself is a pure row-local
+    quantizer (the _pca_power memo), so the projection itself is a pure row-local
     scan: two literal-vector HOF folds per row, zero shuffles. Both
     outputs are rounded to 6 dp on both engines (cross-engine delta
     ~1e-14, five orders inside the margin — the x6_regression_stats
@@ -2489,12 +2435,6 @@ QUERIES["x2_pca_project"] = x2_pca_project
 KNN_K = 5
 KNN_CENTROIDS = 32
 
-# Memoized persisted (vec_id, label, vec, nrm, cluster) assignment frame
-# of the 32-centroid kNN blocker, keyed (appId, sf_dir) — one persisted
-# copy per session instead of one per call (r12 ADVICE #3 class)
-_KNN_CLUSTERED_CACHE: dict[tuple, DataFrame] = {}
-
-
 def x2_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out kNN label accuracy over the embedding table, BLOCKED
     by the deterministic coarse quantizer (the x1_semantic_dedup recipe):
@@ -2523,9 +2463,8 @@ def x2_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cents = _ivf_centroids(spark, sf_dir, n=KNN_CENTROIDS)
     dim = len(cents[0])
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    clustered = _KNN_CLUSTERED_CACHE.get(cache_key)
-    if clustered is None:
+
+    def build():
         emb = spread(
             load_table(spark, sf_dir, "embeddings").select(
                 "vec_id", "label",
@@ -2551,7 +2490,7 @@ def x2_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             6,
         )
-        clustered = (
+        return (
             emb.withColumn("nrm", nrm)
             .join(F.broadcast(cdf))  # bounded: KNN_CENTROIDS rows
             .select(
@@ -2568,11 +2507,12 @@ def x2_knn_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("sc")["cid"].alias("cluster"),
             )
             # read twice (both sides of the in-cluster self-join);
-            # memoized per (appId, sf_dir) so repeated calls reuse ONE
-            # persisted frame (r12 ADVICE #3 class)
+            # a session memo, so repeated calls reuse ONE persisted
+            # frame (r12 ADVICE #3 class)
             .persist()
         )
-        _KNN_CLUSTERED_CACHE[cache_key] = clustered
+
+    clustered = memo.get(spark, "knn_clustered", (sf_dir,), build)
     l, r = clustered.alias("l"), clustered.alias("r")
     # -2.0 sentinel for zero-norm vectors (sorts below every real cosine
     # under DESC on both engines — r7 advice: an unguarded NULL sorts last
@@ -3439,12 +3379,6 @@ ORACLES["x2_mmd_drift"] = _mmd_oracle_sql()
 
 PROBE_SWEEP = (1, 2, 4, 8)
 
-# (appId, sf_dir) -> (scored, exact) persisted shared frames of the
-# probe sweep — substrate memo (every consumer filters/aggregates them
-# per call); skips the eager per-call re-analysis of their construction
-_SWEEP_BASE_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def x2_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF TUNING CURVE — recall@10 vs corpus fraction scanned as
     n_probe sweeps 1/2/4/8 over the 16-centroid quantizer: the
@@ -3482,9 +3416,10 @@ def x2_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: none; §2.9 ANN-serve family."""
     cents = _ivf_centroids(spark, sf_dir)
     q = _query_vector(spark, sf_dir, 0)
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SWEEP_BASE_CACHE.get(cache_key)
-    if cached is None:
+
+    def build():
+        # (scored, exact): the persisted shared frames every sweep point
+        # filters/aggregates per call
         emb = load_table(spark, sf_dir, "embeddings")
         qcol = _lit_vec(q)
         scored = (
@@ -3514,9 +3449,9 @@ def x2_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist()
         )
         exact = x2_cosine_topk(spark, sf_dir).select("vec_id").persist()
-        cached = (scored, exact)
-        _SWEEP_BASE_CACHE[cache_key] = cached
-    scored, exact = cached
+        return scored, exact
+
+    scored, exact = memo.get(spark, "probe_sweep_base", (sf_dir,), build)
     # one ranked pick; each sweep point's probe set is a prefix of it
     ranking = _probe_pick(spark, cents, q, max(PROBE_SWEEP))
     n_total = _emb_count(spark, sf_dir)  # memoized scalar == count(scored)
@@ -3626,10 +3561,6 @@ ORACLES["x2_ivf_probe_sweep"] = _probe_sweep_oracle_sql()
 
 MUTUAL_K = 3
 
-# Memoized persisted (vec_id, v, nrm, cluster) assignment frame of the
-# adaptive-k mutual-kNN blocker, keyed (appId, sf_dir) — one persisted
-# copy per session instead of one per call (r12 ADVICE #3 class)
-_MUTUAL_BASE_CACHE: dict[tuple, DataFrame] = {}
 # adaptive quantizer width for the QUADRATIC-in-width consumers
 # (x2_mutual_knn, x1_semantic_dedup): n_list grows past the base once
 # the corpus outgrows base * width, so per-cluster pair work stays
@@ -3642,13 +3573,6 @@ def _adaptive_nlist(n_vectors: int, base: int) -> int:
     import math as _math
 
     return max(base, _math.ceil(n_vectors / IVF_TARGET_WIDTH))
-
-
-# the oracle-side twin: a scalar subquery over the vector CTE `e`,
-# identical arithmetic (greatest/ceil over the same count)
-def _adaptive_nlist_sql(base: int) -> str:
-    return (f"(SELECT greatest({base}, CAST(ceil(count(*) / "
-            f"{IVF_TARGET_WIDTH}.0) AS BIGINT)) FROM e)")
 
 
 def x2_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3689,7 +3613,6 @@ def x2_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import math
 
-    emb = load_table(spark, sf_dir, "embeddings")
     # adaptive width (see IVF_TARGET_WIDTH): k stays N_CENTROIDS at the
     # contract SFs (<= 2048 vectors), grows with the corpus beyond —
     # the count is a metadata-cheap scalar, the oracle replays the same
@@ -3697,9 +3620,8 @@ def x2_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _adaptive_nlist(_emb_count(spark, sf_dir), N_CENTROIDS)
     cents = _ivf_centroids(spark, sf_dir, n=k)
     dim = len(cents[0])
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    base = _MUTUAL_BASE_CACHE.get(cache_key)
-    if base is None:
+
+    def build():
         # assignment via the BROADCAST-JOIN + max-of-struct template (the
         # x1_semantic_dedup / x2_pq_codes janino-safe form): the k-wide
         # literal scoring array is the fast path at k=16 but a ~20k-term
@@ -3725,9 +3647,9 @@ def x2_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             6,
         )
-        base = (
+        return (
             spread(
-                emb.select(
+                load_table(spark, sf_dir, "embeddings").select(
                     "vec_id",
                     F.col("embedding").cast("array<double>").alias("v"),
                 )
@@ -3750,11 +3672,12 @@ def x2_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             # read by BOTH sides of the within-cluster self-join —
             # persist, or the assignment pipeline executes twice per
-            # materialization; memoized per (appId, sf_dir) so repeated
-            # calls reuse ONE persisted frame (r12 ADVICE #3 class)
+            # materialization; a session memo, so repeated calls reuse
+            # ONE persisted (vec_id, v, nrm, cluster) frame (r12 ADVICE #3)
             .persist()
         )
-        _MUTUAL_BASE_CACHE[cache_key] = base
+
+    base = memo.get(spark, "mutual_knn_base", (sf_dir,), build)
     x, y = base.alias("x"), base.alias("y")
     pairs = x.join(
         y,

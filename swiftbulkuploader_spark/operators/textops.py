@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from swiftbulkuploader_spark import memo
 from swiftbulkuploader_spark.catalog import load_table
 from swiftbulkuploader_spark.plans.layout import spread
 from swiftbulkuploader_spark.functions.text import (
@@ -127,22 +128,13 @@ QT_CENTER = (5.5, 0.75, 0.3)
 QT_TEACHER_T = 1.25
 QT_ROUNDS = 3     # fixed round budget (the Lloyd/pagerank oracle discipline)
 
-# (persisted feature frame, trained weights) per sf_dir: training is
-# deterministic, so the calibration report reuses the student instead of
-# re-running GD (the _LLOYD_CACHE memo pattern)
-# keyed on (applicationId, sf_dir) — the cached feats is a persisted
-# DataFrame bound to its session, so a stopped-and-recreated SparkSession
-# in the same process must MISS (the _LLOYD_CACHE discipline; r7 advice)
-_QT_CACHE: dict[tuple, tuple] = {}
-
-
 def _qt_train(spark: SparkSession, sf_dir: str) -> tuple:
     """(feats, w): the persisted (doc_id, x1..x3, y) frame and the trained
-    QT_ROUNDS-GD weights — x3_quality_train fills the cache as it trains."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _QT_CACHE:
-        x3_quality_train(spark, sf_dir)
-    return _QT_CACHE[key]
+    QT_ROUNDS-GD weights. Training is deterministic, so it is a session
+    memo: the calibration report and the artifact publish reuse the
+    student instead of re-running GD."""
+    return memo.get(spark, "quality_train", (sf_dir,),
+                    lambda: _qt_fit(spark, sf_dir))
 
 
 def x3_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -173,6 +165,11 @@ def x3_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     differences are absorbed by the 6-dp gradient rounding and the
     verifier's 9-significant-digit normalization — booleans (the teacher
     label, the accuracy hit test) are decided on rounded z only."""
+    return qt_report(*_qt_fit(spark, sf_dir))
+
+
+def _qt_fit(spark: SparkSession, sf_dir: str) -> tuple:
+    """(feats, w): the feature frame and QT_ROUNDS of GD from w = 0."""
     feats = _qt_feats(spark, sf_dir)
 
     w = [0.0, 0.0, 0.0, 0.0]
@@ -189,29 +186,21 @@ def x3_quality_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(4)
         ]).first()  # bounded: one 4-scalar gradient row per round
         w = [float(row[f"w{j}"]) for j in range(4)]
-
-    _QT_CACHE[(spark.sparkContext.applicationId, sf_dir)] = (feats, w)
-    return qt_report(feats, w)
-
-
-# the feature frame alone, keyed like _QT_CACHE — the artifact serve path
-# (model_store.x3_quality_model_from_artifact) rebuilds features without
-# GD, and was persisting a fresh identical frame PER CALL (r12 ADVICE #3:
-# repeated bench reps stack storage-pool blocks, the round-12 eviction
-# pressure class)
-_QT_FEATS_CACHE: dict[tuple, DataFrame] = {}
+    return feats, w
 
 
 def _qt_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quality-training FEATURE frame (doc_id, x1..x3 centered, y) —
     a pure persisted scan, no training; factored out (round 12) so the
-    artifact serve path rebuilds features without running GD. Memoized
-    per (appId, sf_dir): one persisted frame per session, shared by the
-    train and serve paths."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _QT_FEATS_CACHE.get(memo_key)
-    if hit is not None:
-        return hit
+    artifact serve path rebuilds features without running GD. A session
+    memo: one persisted frame per session, shared by the train and serve
+    paths (per-call persists stacked storage-pool blocks per bench rep —
+    r12 ADVICE #3, the round-12 eviction pressure class)."""
+    return memo.get(spark, "quality_features", (sf_dir,),
+                    lambda: _qt_feats_frame(spark, sf_dir))
+
+
+def _qt_feats_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(normalize_ws(F.col("text")), " ")
     n_toks = F.greatest(F.size(toks), F.lit(1))
@@ -234,15 +223,13 @@ def _qt_feats(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(QM_W[2]) * F.col("x2r") + F.lit(QM_W[3]) * F.col("x3r"), 6
     )
     # read once per GD round + once for the report: shared-base persist
-    feats = raw.select(
+    return raw.select(
         "doc_id",
         F.round(F.col("x1r") - F.lit(QT_CENTER[0]), 6).alias("x1"),
         F.round(F.col("x2r") - F.lit(QT_CENTER[1]), 6).alias("x2"),
         F.round(F.col("x3r") - F.lit(QT_CENTER[2]), 6).alias("x3"),
         F.when(teacher_z >= QT_TEACHER_T, 1.0).otherwise(0.0).alias("y"),
     ).persist()
-    _QT_FEATS_CACHE[memo_key] = feats
-    return feats
 
 
 def qt_report(feats: DataFrame, w: list[float]) -> DataFrame:
@@ -1335,14 +1322,6 @@ ORACLES["x3_zipf_fit"] = """
 
 SB_LAMBDA = 0.4  # Brants et al. 2007 backoff penalty
 
-# Memoized persisted LM count tables (c3, c2, c1) keyed (appId, sf_dir)
-# — the count tables ARE the trained model (Brants et al.'s entire
-# point), so they follow the trained-artifact memo precedent (_QT_CACHE
-# / BPE merges): train once per session, serve every call. Before this
-# each call re-ran the three train-half aggregations (r13-opt).
-_SB_COUNTS_CACHE: dict[tuple, tuple] = {}
-
-
 def x3_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigram LM scoring with stupid backoff (Brants et al. 2007, "Large
     Language Models in Machine Translation") — the backoff scheme built
@@ -1416,11 +1395,11 @@ def x3_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("g.w1", "g.w2")
         )
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SB_COUNTS_CACHE.get(cache_key)
-    if cached is not None:
-        c3, c2, c1 = cached
-    else:
+    # the persisted LM count tables (c3, c2, c1) ARE the trained model
+    # (Brants et al.'s entire point), so they are a session memo like the
+    # other trained artifacts: train once per session, serve every call.
+    # Before this each call re-ran the three train-half aggregations.
+    def train_counts():
         train = toks.filter(F.col("doc_id") % 2 == 0)
         c3 = grams3(train).groupBy("w1", "w2", "w3").agg(
             F.count(F.lit(1)).alias("c3")
@@ -1434,7 +1413,10 @@ def x3_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("c1"))
             .persist()
         )
-        _SB_COUNTS_CACHE[cache_key] = (c3, c2, c1)
+        return c3, c2, c1
+
+    c3, c2, c1 = memo.get(spark, "stupid_backoff_counts", (toks,),
+                          train_counts)
     nn = c1.agg(F.sum("c1").cast("double").alias("n_train"))
 
     lam = F.lit(SB_LAMBDA)
@@ -1596,17 +1578,15 @@ def x3_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# merges are deterministic per sf_dir: train once, reuse across the train
-# report and the encoder (the _LLOYD_CACHE memo pattern — caching cannot
-# change values, only skip the recompute)
-_BPE_CACHE: dict[str, list[tuple]] = {}
-
-
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
-    """The x3_bpe_train loop, memoized: (rank, x, y, merged, count) rows."""
-    cached = _BPE_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
+    """The x3_bpe_train loop, memoized: (rank, x, y, merged, count) rows.
+    Merges are deterministic per input, so the train report and the
+    encoder share one training per session."""
+    return memo.get(spark, "bpe_merges", (sf_dir,),
+                    lambda: _bpe_train(spark, sf_dir))
+
+
+def _bpe_train(spark: SparkSession, sf_dir: str) -> list[tuple]:
     docs = load_table(spark, sf_dir, "documents")
     norm = F.lower(normalize_ws(F.col("text")))
     tok = docs.filter(F.length(F.trim(norm)) > 0).select(
@@ -1645,7 +1625,6 @@ def _bpe_merges(spark: SparkSession, sf_dir: str) -> list[tuple]:
         merges.append((rank, x, y, x + y, int(c)))
         wcol = F.replace(wcol, F.lit(f" {x}  {y} "), F.lit(f" {x}{y} "))
     words.unpersist()
-    _BPE_CACHE[sf_dir] = merges
     return merges
 
 
@@ -1866,7 +1845,7 @@ ORACLES["x3_readability"] = r"""
 
 def x3_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the LEARNED BPE merge table (x3_bpe_train, memoized via
-    _BPE_CACHE) to the corpus — the tokenizer-apply half that turns the
+    _bpe_merges) to the corpus — the tokenizer-apply half that turns the
     trained artifact into per-document token statistics: subtoken count
     under the learned vocabulary, word count, and fertility
     (subtokens/word, THE tokenizer-quality metric — fertility creep on a
@@ -2117,7 +2096,7 @@ CALIB_BINS = 10
 
 def x6_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram of the TRAINED quality classifier
-    (x3_quality_train's student, reused via _QT_CACHE) against its teacher
+    (x3_quality_train's student, reused via _qt_train) against its teacher
     labels: decile-bin the predicted keep-probability, report per bin the
     count, mean predicted probability, empirical positive fraction, and
     the gap — the calibration table behind ECE and the first artifact to
@@ -2612,17 +2591,15 @@ def _unigram_lp_from_counts(cnts: DataFrame) -> DataFrame:
     )
 
 
-_UNIGRAM_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _unigram_final_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Seed -> EM rounds -> final prune; memoized + persisted per
-    (applicationId, sf_dir) — the _LLOYD_CACHE discipline — because both
-    contract queries (train report, encode) consume the trained vocab."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _UNIGRAM_CACHE.get(key)
-    if cached is not None:
-        return cached
+    """Seed -> EM rounds -> final prune; a persisted session memo,
+    because both contract queries (train report, encode) consume the
+    trained vocab."""
+    return memo.get(spark, "unigram_vocab", (sf_dir,),
+                    lambda: _unigram_train(spark, sf_dir))
+
+
+def _unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # localCheckpoint every frame consumed by more than one branch
     # (CLAUDE.md rule 4: union/join branches re-execute their subtree —
@@ -2685,9 +2662,7 @@ def _unigram_final_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("c").desc(), F.col("piece").asc()
             ).limit(UNIGRAM_V)
         vocab = _unigram_lp_from_counts(char_cnt.unionByName(multi_cnt))
-    out = vocab.persist()
-    _UNIGRAM_CACHE[key] = out
-    return out
+    return vocab.persist()
 
 
 def x3_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2719,7 +2694,7 @@ def x3_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def x3_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apply the trained unigram-LM tokenizer (memoized _UNIGRAM_CACHE)
+    """Apply the trained unigram-LM tokenizer (memoized _unigram_final_vocab)
     to the corpus via Viterbi and report per-source fertility — the
     encode half that turns the trained artifact into the
     tokens-per-word / single-char-fallback-share numbers a data engineer
@@ -2994,7 +2969,7 @@ ORACLES["x3_unigram_encode"] = f"""
 def x3_tokenizer_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE vs unigram-LM tokenizer, side by side, per source — the
     report a data engineer reads to PICK a tokenizer: both trained
-    artifacts (memoized _BPE_CACHE and _UNIGRAM_CACHE) applied to the
+    artifacts (memoized _bpe_merges and _unigram_final_vocab) applied to the
     SAME word population (1 <= len <= UNIGRAM_MAXW, so the comparison
     is apples-to-apples — BPE alone also encodes longer words), with
     per-source piece counts, fertilities, their ratio, and an
@@ -3112,21 +3087,18 @@ WP_TOP = 40       # multi-char pieces kept PER continuation class
 WP_MIN_CHAR = 2   # single chars below this weighted count are dropped from
                   # the vocab, so rare-char words exercise the [UNK] path
 
-_WP_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _wordpiece_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(piece, cont) WordPiece vocabulary derived deterministically from
     the corpus: position-classed substring counts over the distinct-word
     table (cont = starts past position 1, the '##'-prefix class), all
     single chars with weighted count >= WP_MIN_CHAR, plus the top WP_TOP
-    multi-char grams per class by (count desc, piece asc). Memoized +
-    persisted per (applicationId, sf_dir) — the _LLOYD_CACHE
-    discipline."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _WP_CACHE.get(key)
-    if cached is not None:
-        return cached
+    multi-char grams per class by (count desc, piece asc). A persisted
+    session memo."""
+    return memo.get(spark, "wordpiece_vocab", (sf_dir,),
+                    lambda: _wordpiece_train(spark, sf_dir))
+
+
+def _wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     words = _unigram_words(docs)
     grid = (
@@ -3161,9 +3133,7 @@ def _wordpiece_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= WP_TOP)
         .select("piece", "cont")
     )
-    out = singles.unionByName(multis).persist()
-    _WP_CACHE[key] = out
-    return out
+    return singles.unionByName(multis).persist()
 
 
 def x3_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from swiftbulkuploader_spark import memo
 from swiftbulkuploader_spark.catalog import load_table
 
 
@@ -119,11 +120,11 @@ def x5_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # data, so bare no-orders would be vacuously empty)
     big_orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000)
     # the scalar subquery evaluates driver-side to a literal — exactly what
-    # Spark's ScalarSubquery node does, without the 1-row BNLJ in the plan
-    from swiftbulkuploader_spark.operators.tpch_more import _memo_scalar
-
-    avg_bal = _memo_scalar(
-        spark, sf_dir, "q22_avg_bal",
+    # Spark's ScalarSubquery node does, without the 1-row BNLJ in the plan;
+    # a session memo keyed on the aggregated frame's plan, since the value
+    # re-ran its subtree per call on top of the main query's own run
+    avg_bal = memo.get(
+        spark, "q22_avg_bal", (cust,),
         lambda: cust.filter(F.col("c_acctbal") > 0)
         .agg(F.avg("c_acctbal")).first()[0],
     )

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from swiftbulkuploader_spark import memo
 from swiftbulkuploader_spark.catalog import load_table
 
 
@@ -193,8 +194,11 @@ def x5_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier").filter(F.col("s_nationkey") == 3)
     base = li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
     per_part = base.groupBy("l_partkey").agg(F.sum(_revenue()).alias("raw_value"))
-    total, n = _memo_scalar(
-        spark, sf_dir, "q11_total_n",
+    # driver-evaluated scalar subquery: a session memo keyed on the
+    # aggregated frame's plan (it re-ran its subtree per call on top of the
+    # main query's own run of the same subtree)
+    total, n = memo.get(
+        spark, "q11_total_n", (per_part,),
         lambda: tuple(per_part.agg(F.sum("raw_value"), F.count("*")).first()),
     )
     thr = 3.0 * total / n * (1.0 + 1e-11)
@@ -254,8 +258,8 @@ def x5_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     supp = load_table(spark, sf_dir, "supplier")
     rev = li.groupBy("l_suppkey").agg(F.round(F.sum(_revenue()), 2).alias("total_rev"))
-    max_rev = _memo_scalar(
-        spark, sf_dir, "q15_max_rev",
+    max_rev = memo.get(
+        spark, "q15_max_rev", (rev,),
         lambda: rev.agg(F.max("total_rev")).first()[0],
     )
     return (
@@ -354,20 +358,6 @@ def x5_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 BASKET_MIN_SUPPORT = 3
 
 
-# deterministic scalar-subquery memo (r13-opt, the _PROBE_CACHE class):
-# these driver-evaluated literals (global avg / total / max aggregates)
-# re-ran their aggregate subtree once per call ON TOP of the main query's
-# own run of the same subtree; the values are session constants per sf_dir
-_SCALAR_CACHE: dict[tuple, object] = {}
-
-
-def _memo_scalar(spark, sf_dir: str, tag: str, fn):
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key not in _SCALAR_CACHE:
-        _SCALAR_CACHE[key] = fn()
-    return _SCALAR_CACHE[key]
-
-
 def x5_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket pair analysis: parts co-ordered in the same order,
     with support and lift — the classic co-occurrence/affinity query (and
@@ -386,8 +376,8 @@ def x5_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = order_part_cells(spark, sf_dir).select(
         F.col("ok").alias("l_orderkey"), F.col("pk").alias("l_partkey")
     )
-    n_orders = _memo_scalar(
-        spark, sf_dir, "n_orders",
+    n_orders = memo.get(
+        spark, "n_orders", (sf_dir,),
         lambda: load_table(spark, sf_dir, "orders").count(),
     )  # metadata count, memoized
     pairs = (

@@ -3,8 +3,7 @@
 The reference reads exactly one source (the filesystem) and one table
 (MySQL). An engine replacing it meets data where it lives: explicit-schema
 readers/writers for CSV, JSON-lines, ORC and Parquet with consistent
-null/date handling, plus the JDBC wiring documented (no database in this
-environment to test against).
+null/date handling.
 
 Explicit schemas everywhere: `inferSchema` double-scans the data and guesses
 types per-run — at 100 TB both are unacceptable. Schema objects are the
@@ -111,31 +110,3 @@ def read_evolved(spark: SparkSession, path: str,
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
     return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def read_jdbc(spark: SparkSession, url: str, table: str, *,
-              partition_column: str | None = None, num_partitions: int = 8,
-              lower_bound: int | None = None, upper_bound: int | None = None,
-              **options) -> DataFrame:
-    """JDBC source — the reference's MySQL manifest, were it still external
-    (olrcdb.py:9-29). Partitioned reads (`partitionColumn` + bounds) are
-    mandatory at scale: without them the whole table streams through one
-    task. Untested here (no database in the container); wiring per the
-    public DataFrameReader.jdbc contract."""
-    r = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-    )
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None:
-            raise ValueError("partitioned JDBC reads need lower_bound and upper_bound")
-        r = (
-            r.option("partitionColumn", partition_column)
-            .option("numPartitions", str(num_partitions))
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-        )
-    for k, v in options.items():
-        r = r.option(k, v)
-    return r.load()

@@ -15,8 +15,8 @@ Differences from the reference, by design (SURVEY.md §7.4):
 * ids are stable content-free keys: xxhash64(path) (auto-increment has no
   distributed equivalent; olrcdb.py:40 -> SURVEY.md §7.4 item 10).
 
-The `binaryFile` reader covers the content-bearing case; `ingest_listing`
-is the metadata-only path (no file bytes moved).
+`ingest_listing` is the metadata-only path: no file bytes move until
+the upload reads them.
 """
 
 from __future__ import annotations
@@ -125,24 +125,6 @@ def ingest_listing(spark: SparkSession, root: str, fanout: int | None = None) ->
         "mtime",
         F.lit(False).alias("uploaded"),
         "error",
-    )
-
-
-def ingest_with_content(spark: SparkSession, root: str) -> DataFrame:
-    """Content-bearing ingest via the built-in binaryFile source: returns
-    (id, path, size, mtime, content). Spark parallelizes the listing and
-    the reads; filters on path/length push into the listing."""
-    df = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(root)
-    )
-    return df.select(
-        F.xxhash64("path").alias("id"),
-        "path",
-        F.col("length").alias("size"),
-        F.col("modificationTime").alias("mtime"),
-        "content",
     )
 
 

@@ -229,8 +229,6 @@ class TestAnnArtifact:
         write(0.25)
         fp1 = ann_index.dataset_fingerprint(spark, sfd)
         write(0.75)  # same count, same dim, different values
-        ann_index.invalidate_dataset_fingerprint(spark, sfd)
-        fp2 = ann_index.dataset_fingerprint(spark, sfd)
+        fp2 = ann_index.dataset_fingerprint(spark, sfd)  # memo input changed
         assert fp1 != fp2
-        # and the memoized path is what retrain paths must bypass:
         assert ann_index.dataset_fingerprint(spark, sfd) == fp2

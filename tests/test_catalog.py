@@ -3,17 +3,10 @@ input is unchanged, and inferred again once it is rewritten."""
 
 from __future__ import annotations
 
-from swiftbulkuploader_spark import catalog
+from swiftbulkuploader_spark import memo
 from swiftbulkuploader_spark.catalog import load_table, table_path
 
 from conftest import SF_SMOKE
-
-
-def _forget(sf_dir: str, name: str) -> None:
-    """Drop the stored schemas of one table, so its next read infers."""
-    path = table_path(sf_dir, name)
-    for key in [k for k in catalog._SCHEMAS if k[1] == path]:
-        del catalog._SCHEMAS[key]
 
 
 def _jobs_during(spark, fn, group):
@@ -37,7 +30,7 @@ def test_second_read_of_unchanged_table_fires_no_job(spark):
 def test_stored_schema_events_match_a_fresh_read(spark):
     """events.ts is TIMESTAMP(NANOS): the stored bigint schema still takes
     the ns -> us conversion, so dtypes and rows equal an inferring read."""
-    _forget(SF_SMOKE, "events")
+    memo.clear("parquet_schema")  # the next read infers
     fresh = load_table(spark, SF_SMOKE, "events")
     stored = load_table(spark, SF_SMOKE, "events")
     assert dict(fresh.dtypes)["ts"] == "timestamp_ntz"
@@ -48,7 +41,7 @@ def test_stored_schema_events_match_a_fresh_read(spark):
 def test_stored_schema_read_hits_a_frame_cached_from_inference(spark):
     """Memoized substrates persist a frame built from one read and match it
     from later reads; a stored-schema read must still find that cache."""
-    _forget(SF_SMOKE, "nation")
+    memo.clear("parquet_schema")
     cached = load_table(spark, SF_SMOKE, "nation").persist()
     try:
         cached.count()

@@ -766,10 +766,10 @@ class TestLshRecallEval:
         """J=1 pairs agree on every band, so banding recall over a corpus
         whose only true pairs are exact duplicates is exactly 1: a 3-clique
         (3 pairs) + a pair (1) = 4 truth pairs, 4 hits."""
-        from swiftbulkuploader_spark.operators.dedup import _ALLPAIRS_CACHE
+        from swiftbulkuploader_spark import memo
         from swiftbulkuploader_spark.operators.components import x1_lsh_recall_eval
 
-        _ALLPAIRS_CACHE.clear()
+        memo.clear("allpairs")
         tri = "alpha beta gamma delta epsilon zeta"
         pair = "one two three four five six"
         rows = [

@@ -149,9 +149,8 @@ class TestModelStore:
         model_store.ensure_bpe(spark, sfd, mroot)
         assert calls["n"] == 1  # current manifest: served, no retrain
 
-        # regenerate: SAME row count, different content bytes — the swap
-        # hook any writer calls (and every save_* path calls internally)
+        # regenerate: SAME row count, different content bytes — the
+        # fingerprint memo's input changed, so it misses on its own
         write_docs("gamma delta longer")
-        model_store.invalidate_fingerprint(spark, sfd, "documents")
         model_store.ensure_bpe(spark, sfd, mroot)
         assert calls["n"] == 2  # content change observed -> retrain

@@ -500,47 +500,35 @@ class TestR13OptSubstrates:
         }
         assert memo == fresh
 
+    @staticmethod
+    def _rebuild_adds_no_cached_rdd(spark, query, sf_dir) -> None:
+        """Build and run `query` twice: the second build reuses the
+        memoized persisted frames, so no new cached RDD appears."""
+        query(spark, sf_dir).collect()
+        n = spark.sparkContext._jsc.getPersistentRDDs().size()
+        query(spark, sf_dir).collect()
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == n, \
+            query.__name__
+
     def test_scalar_and_frame_memos_identity(self, spark):
         from swiftbulkuploader_spark.operators.similarity import (
             _ivf_centroids,
             x2_knn_accuracy,
             x2_mutual_knn,
-            _KNN_CLUSTERED_CACHE,
-            _MUTUAL_BASE_CACHE,
         )
-        from swiftbulkuploader_spark.operators.dedup import (
-            x1_semantic_dedup,
-            _SEMANTIC_CLUSTERED_CACHE,
-        )
+        from swiftbulkuploader_spark.operators.dedup import x1_semantic_dedup
 
         c1 = _ivf_centroids(spark, self.SF)
         assert _ivf_centroids(spark, self.SF) is c1  # collect memoized
-        key = (spark.sparkContext.applicationId, self.SF)
         # building each query twice reuses ONE persisted assignment frame
-        x2_knn_accuracy(spark, self.SF)
-        f = _KNN_CLUSTERED_CACHE[key]
-        x2_knn_accuracy(spark, self.SF)
-        assert _KNN_CLUSTERED_CACHE[key] is f
-        x2_mutual_knn(spark, self.SF)
-        f = _MUTUAL_BASE_CACHE[key]
-        x2_mutual_knn(spark, self.SF)
-        assert _MUTUAL_BASE_CACHE[key] is f
-        x1_semantic_dedup(spark, self.SF)
-        f = _SEMANTIC_CLUSTERED_CACHE[key]
-        x1_semantic_dedup(spark, self.SF)
-        assert _SEMANTIC_CLUSTERED_CACHE[key] is f
+        for query in (x2_knn_accuracy, x2_mutual_knn, x1_semantic_dedup):
+            self._rebuild_adds_no_cached_rdd(spark, query, self.SF)
 
     def test_sb_counts_memo(self, spark):
-        from swiftbulkuploader_spark.operators.textops import (
-            x3_stupid_backoff,
-            _SB_COUNTS_CACHE,
-        )
+        from swiftbulkuploader_spark.operators.textops import x3_stupid_backoff
 
-        x3_stupid_backoff(spark, self.SF)
-        key = (spark.sparkContext.applicationId, self.SF)
-        tables = _SB_COUNTS_CACHE[key]
-        x3_stupid_backoff(spark, self.SF)
-        assert _SB_COUNTS_CACHE[key] is tables  # one trained model/session
+        # one trained model (c3, c2, c1) per session
+        self._rebuild_adds_no_cached_rdd(spark, x3_stupid_backoff, self.SF)
 
     def test_gram_pos_memo_and_positions(self, spark):
         from pyspark.sql import functions as F
@@ -581,19 +569,15 @@ class TestR13OptSubstrates:
 
     def test_reindex_repaired_memo(self, spark):
         from swiftbulkuploader_spark.operators.ann_index import (
-            _REPAIRED_CACHE,
             x2_reindex_partial,
         )
 
-        x2_reindex_partial(spark, self.SF)
-        key = (spark.sparkContext.applicationId, self.SF)
-        f = _REPAIRED_CACHE[key]
-        out2 = x2_reindex_partial(spark, self.SF)
-        assert _REPAIRED_CACHE[key] is f  # one means/flag subtree/session
+        # one means/flag subtree per session
+        self._rebuild_adds_no_cached_rdd(spark, x2_reindex_partial, self.SF)
         # the memoized frame still drives a correct per-call serve: one
         # output row per cluster, unflagged rows keep their population
-        rows = out2.collect()
-        assert len(rows) == f.count()
+        rows = x2_reindex_partial(spark, self.SF).collect()
+        assert len(rows) == len({r["cluster"] for r in rows})
         for r in rows:
             if not r["flagged"]:
                 assert r["n_after"] == r["n_before"]

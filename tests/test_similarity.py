@@ -458,13 +458,13 @@ class TestPcaPower:
         values and residuals are 0."""
         import pytest as _pt
 
+        from swiftbulkuploader_spark import memo
         from swiftbulkuploader_spark.operators.similarity import (
-            _PCA_CACHE,
             x2_pca_power,
             x2_pca_project,
         )
 
-        _PCA_CACHE.clear()
+        memo.clear("pca_power")
         vecs = [
             (2.0, 7.0, 0.0, 0.0),
             (-2.0, 7.0, 0.0, 0.0),
@@ -487,12 +487,10 @@ class TestPcaPower:
         keeps its full norm as residual."""
         import pytest as _pt
 
-        from swiftbulkuploader_spark.operators.similarity import (
-            _PCA_CACHE,
-            x2_pca_project,
-        )
+        from swiftbulkuploader_spark import memo
+        from swiftbulkuploader_spark.operators.similarity import x2_pca_project
 
-        _PCA_CACHE.clear()
+        memo.clear("pca_power")
         vecs = [
             (3.0, 0.0, 0.0, 0.0),
             (-3.0, 0.0, 0.0, 0.0),

@@ -631,9 +631,10 @@ def shape_lloyd_refine(df):
     shuffle bytes both ~linear in rows (rows x dim dominates); a
     super-linear ratio would mean the mean shuffle isn't combining
     map-side."""
+    from swiftbulkuploader_spark import memo
     from swiftbulkuploader_spark.operators import similarity as S
 
-    S._LLOYD_CACHE.clear()  # probe measures training, not the round-7 memo
+    memo.clear("lloyd")  # probe measures training, not the round-7 memo
     emb = df.select(
         F.col("event_id").alias("vec_id"),
         F.transform(
