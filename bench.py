@@ -356,6 +356,7 @@ PIPE_N_FILES = 20000
 # mirror any new flag here.
 MEMOIZED_OUTPUT = {
     "x1_simhash_exact",
+    "x1_simhash_neardup",
     "x1_minhash_neardup",
     "x1_minhash_exact",
     "x1_dup_clusters_star",

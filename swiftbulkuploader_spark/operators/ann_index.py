@@ -42,6 +42,10 @@ from pyspark.sql import functions as F
 
 from swiftbulkuploader_spark import memo
 from swiftbulkuploader_spark.catalog import load_table, read_parquet
+from swiftbulkuploader_spark.operators.model_store import (
+    _manifest_matches,
+    _write_manifest,
+)
 from swiftbulkuploader_spark.operators.similarity import (
     N_PROBE,
     PQ_M,
@@ -115,20 +119,6 @@ def _scan_fingerprint(spark: SparkSession, sf_dir: str) -> str:
     return hashlib.sha256(raw.encode("utf-8")).hexdigest()
 
 
-def _manifest_matches(spark: SparkSession, path: str, fingerprint: str) -> bool:
-    """True iff the artifact at `path` carries a manifest whose
-    fingerprint equals the current dataset's. Missing manifest (old or
-    partial artifact) is a mismatch; real IO errors propagate
-    (state_io discipline)."""
-    from swiftbulkuploader_spark.streaming.state_io import state_path_exists
-
-    mpath = os.path.join(path, "manifest")
-    if not state_path_exists(spark, mpath):
-        return False
-    rows = read_parquet(spark, mpath).collect()
-    return len(rows) == 1 and rows[0]["fingerprint"] == fingerprint
-
-
 def ensure_index(spark: SparkSession, sf_dir: str, path: str | None = None) -> str:
     """Idempotent publish: (re)train IFF the artifact is missing, partial,
     or trained on different data (fingerprint mismatch) — the serve
@@ -193,31 +183,31 @@ def save_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     codes.write.mode("overwrite").parquet(os.path.join(path, "codes"))
     # manifest LAST: a partially-written artifact never matches, so an
     # interrupted publish is retrained rather than served (r11 ADVICE #1)
-    spark.createDataFrame(
-        [(dataset_fingerprint(spark, sf_dir), INDEX_FORMAT_VERSION)],
-        "fingerprint string, format_version int",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "manifest")
-    )
+    _write_manifest(spark, path, dataset_fingerprint(spark, sf_dir),
+                    INDEX_FORMAT_VERSION)
 
 
 def load_index(spark: SparkSession, path: str) -> AnnIndex:
     """Load the artifact: two bounded collects (k centroid rows, m*k
     codebook rows — the allowlisted quantizer-state class) plus the
-    assignment table as a lazy partitioned frame. Every table is read
-    with its memoized schema, so a warm load launches no inference job."""
-    crows = read_parquet(spark, os.path.join(path, "centroids")) \
-        .orderBy("cid").collect()
-    centroids = [[float(x) for x in r["cv"]] for r in crows]
-    brows = read_parquet(spark, os.path.join(path, "codebooks")) \
-        .orderBy("m", "k").collect()
-    n_m = max((r["m"] for r in brows), default=-1) + 1
-    books: list[list[list[float]]] = [[] for _ in range(n_m)]
-    for r in brows:
-        books[r["m"]].append([float(x) for x in r["cv"]])
-    assignments = read_parquet(spark, os.path.join(path, "assignments"))
-    codes = read_parquet(spark, os.path.join(path, "codes"))
-    return AnnIndex(centroids, books, assignments, codes)
+    assignment table as a lazy partitioned frame. The loaded index is a
+    session memo whose inputs are the four artifact tables, so a warm load
+    launches no job and a republished index is loaded again."""
+    def build() -> AnnIndex:
+        crows = read_parquet(spark, os.path.join(path, "centroids")) \
+            .orderBy("cid").collect()
+        centroids = [[float(x) for x in r["cv"]] for r in crows]
+        brows = read_parquet(spark, os.path.join(path, "codebooks")) \
+            .orderBy("m", "k").collect()
+        n_m = max((r["m"] for r in brows), default=-1) + 1
+        books: list[list[list[float]]] = [[] for _ in range(n_m)]
+        for r in brows:
+            books[r["m"]].append([float(x) for x in r["cv"]])
+        assignments = read_parquet(spark, os.path.join(path, "assignments"))
+        codes = read_parquet(spark, os.path.join(path, "codes"))
+        return AnnIndex(centroids, books, assignments, codes)
+
+    return memo.get(spark, "ann_index", (path,), build)
 
 
 def serve_ivf_topk(spark: SparkSession, emb: DataFrame, index: AnnIndex,
@@ -609,12 +599,8 @@ def partial_reindex(spark: SparkSession, sf_dir: str,
         .parquet(os.path.join(dst_path, "codebooks"))
     read_parquet(spark, os.path.join(src_path, "codes")) \
         .write.mode("overwrite").parquet(os.path.join(dst_path, "codes"))
-    spark.createDataFrame(
-        [(dataset_fingerprint(spark, sf_dir), INDEX_FORMAT_VERSION)],
-        "fingerprint string, format_version int",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(dst_path, "manifest")
-    )
+    _write_manifest(spark, dst_path, dataset_fingerprint(spark, sf_dir),
+                    INDEX_FORMAT_VERSION)
     return flagged
 
 

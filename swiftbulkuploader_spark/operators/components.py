@@ -130,20 +130,20 @@ def x1_dup_clusters(spark, sf_dir: str) -> DataFrame:
     The full dedup story end-to-end: LSH banding emits PAIRS, label
     propagation closes them transitively into CLUSTERS, and one survivor
     per cluster is kept — what a pretraining dedup pass actually deletes
-    against. cluster_id = min(doc_id) is the closure invariant (connected
-    components labels each component with its minimum node); survivor_id is
-    a POLICY choice layered on top — keep the longest document (n_chars,
-    ties to the smaller id), the "keep best, not keep first" rule a real
-    dedup pass wants. Rows-only check (the pair set is hash-seed-specific);
-    the closure semantics are pinned by tests/test_components.py on crafted
-    corpora with known chain structure."""
+    against. The pairs are the banded-LSH production near-dup set
+    (``minhash_corpus_pairs``: Jaccard >= 0.5, the memoized pair frame
+    x1_minhash_exact serves). cluster_id = min(doc_id) is the closure
+    invariant (connected components labels each component with its
+    minimum node); survivor_id is a POLICY choice layered on top — keep
+    the longest document (n_chars, ties to the smaller id), the "keep
+    best, not keep first" rule a real dedup pass wants. The oracle
+    replays the MinHash pairs, closes them with a recursive reachability
+    CTE and picks the survivor with a window."""
     from swiftbulkuploader_spark.catalog import load_table
-    from swiftbulkuploader_spark.operators.dedup import x1_minhash_neardup
+    from swiftbulkuploader_spark.operators.dedup import minhash_corpus_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    # the memoized/persisted seeded pair frame (r13-opt) — the expression
-    # chain is IDENTICAL to the inline sigs->candidates->verify it replaces
-    pairs = x1_minhash_neardup(spark, sf_dir, min_est=0.25)
+    pairs = minhash_corpus_pairs(spark, sf_dir)
     clusters = dedup_clusters(pairs).join(docs.select("doc_id", "n_chars"), "doc_id")
     return (
         clusters.groupBy("cluster_id")
@@ -167,9 +167,9 @@ def x1_dup_clusters_exact(spark, sf_dir: str) -> DataFrame:
     Pair graph: the PREFIX-FILTERED exact similarity join
     (dedup.py::allpairs_prefix_pairs — md5-prefix shingle hashes, rarest-
     prefix postings, length filter, hash-array verify; measured 16.6x over
-    the naive posting join) — no seeded MinHash anywhere, hence no
-    rows-only escape. Closure: label propagation
-    with a FIXED 3-round budget (`max_iter=3, check_every=3` — one burst,
+    the naive posting join) — every pair with Jaccard >= 0.5, where
+    x1_dup_clusters keeps only the pairs LSH banding finds. Closure: label
+    propagation with a FIXED 3-round budget (`max_iter=3, check_every=3` — one burst,
     no early probe divergence; labels are monotone, so a graph converged
     earlier is unchanged by the spare rounds). Near-dup clusters have
     diameter 2-3, so 3 rounds is also the practical closure.
@@ -235,9 +235,6 @@ QUERIES = {
     "x1_dup_clusters_star": x1_dup_clusters_star,
 }
 
-# x1_dup_clusters stays rows-only by design: its pair graph depends on
-# seeded xxhash64 minhashes, which DuckDB cannot reproduce; closure
-# correctness is unit-pinned AND oracle-pinned via x1_dup_clusters_exact.
 ORACLES: dict[str, str] = {
     # literal-shingle posting join + 3 unrolled label-propagation rounds
     "x1_dup_clusters_exact": """
@@ -489,7 +486,16 @@ def connected_components_star(edges: DataFrame, max_iter: int = 40,
     return members.unionByName(centers).groupBy("node").agg(
         F.min("component").alias("component")
     )
-ORACLES["x1_dup_clusters_star"] = """
+# the true transitive closure over a symmetric `edges` CTE: every label
+# reachable from a node (no fixed-round assumption); min(label) per node is
+# its component
+_REACH_CTE = """reach(node, label) AS (
+        SELECT DISTINCT a AS node, a AS label FROM edges
+        UNION
+        SELECT e.a AS node, r.label
+        FROM edges e JOIN reach r ON e.b = r.node
+    )"""
+ORACLES["x1_dup_clusters_star"] = f"""
     WITH RECURSIVE t AS (
         SELECT doc_id,
                string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS toks
@@ -512,15 +518,38 @@ ORACLES["x1_dup_clusters_star"] = """
         WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= CAST(0.5 AS DOUBLE)
     ), edges AS (
         SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0
-    ), reach(node, label) AS (
-        SELECT DISTINCT a AS node, a AS label FROM edges
-        UNION
-        SELECT e.a AS node, r.label
-        FROM edges e JOIN reach r ON e.b = r.node
-    )
+    ), {_REACH_CTE}
     SELECT node AS doc_id, min(label) AS cluster_id
     FROM reach GROUP BY node
 """
+
+
+def _dup_clusters_oracle_sql() -> str:
+    """The MinHash pair oracle as the edge list, the reachability closure,
+    then per cluster its size and the longest member (ties to the smaller
+    id) — x1_dedup_keep_best's survivor window."""
+    from swiftbulkuploader_spark.operators.dedup import _minhash_exact_oracle_sql
+
+    return f"""
+    WITH RECURSIVE e0 AS (
+        SELECT doc_a AS a, doc_b AS b FROM ({_minhash_exact_oracle_sql()})
+    ), edges AS (
+        SELECT a, b FROM e0 UNION SELECT b AS a, a AS b FROM e0
+    ), {_REACH_CTE}, cl AS (
+        SELECT node AS doc_id, min(label) AS cluster_id FROM reach GROUP BY node
+    )
+    SELECT cluster_id, cluster_size, survivor_id FROM (
+        SELECT cl.cluster_id,
+               count(*) OVER (PARTITION BY cl.cluster_id) AS cluster_size,
+               cl.doc_id AS survivor_id,
+               row_number() OVER (PARTITION BY cl.cluster_id
+                                  ORDER BY d.n_chars DESC, cl.doc_id ASC) AS rn
+        FROM cl JOIN documents d USING (doc_id)
+    ) WHERE rn = 1
+"""
+
+
+ORACLES["x1_dup_clusters"] = _dup_clusters_oracle_sql()
 
 
 # ---------------------------------------------------------------------------

@@ -4,18 +4,20 @@ Four tiers, all expressed as native DataFrame plans (no Python in the hot
 path) so each scales to 100 TB:
 
 * exact        — md5 fingerprint groupBy; one narrow shuffle on the hash.
-* MinHash LSH  — word-shingles -> 32 minhashes -> 8 bands of 4 -> band-bucket
+* MinHash LSH  — word 3-shingles -> 32-bit md5-prefix hashes -> 32
+                 xor-multiply minhashes -> 8 bands of 4 -> band-tuple
                  self-join -> exact-Jaccard verify. The band join shuffles on
-                 (band_id, band_hash) only; candidate verification touches
+                 (band, 4 ints) only; candidate verification touches
                  candidate pairs, never the n^2 cross product.
-* SimHash      — 64-bit signed-projection fingerprint via one explode +
-                 64 conditional aggregates (all codegen); near-dup pairs via
-                 16-bit chunk banding (pigeonhole: hamming<=3 pairs share a
+* SimHash      — 32-bit signed-vote fingerprint via one explode + 32
+                 conditional aggregates (all codegen); near-dup pairs via
+                 8-bit chunk banding (pigeonhole: hamming<=3 pairs share a
                  chunk) + bit_count(xor) verify.
-* n-gram Jaccard — exact Jaccard over word 5-shingle sets for LSH candidates.
+* n-gram Jaccard — exact Jaccard over the shingle-hash sets of every LSH
+                 candidate.
 
-The exact tier is DuckDB-oracle-checked; the probabilistic tiers are
-rows-only (hash-seed specific) and pinned by unit tests on crafted corpora.
+Every tier hashes with plain integer arithmetic (md5 prefixes, no seeded
+hash), so each query has a DuckDB oracle that replays it exactly.
 """
 
 from __future__ import annotations
@@ -222,32 +224,17 @@ def x1_prefix_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X1b — MinHash + LSH banding
 # ---------------------------------------------------------------------------
 
-N_HASHES = 32
-N_BANDS = 8
-ROWS_PER_BAND = N_HASHES // N_BANDS
-
-
-def _minhash_signature(hashes: Column) -> list[Column]:
-    """32 independent minhashes derived from per-shingle base hashes: each
-    shingle string is hashed ONCE (xxhash64); the i-th family re-mixes the
-    64-bit base with salt i (long-long xxhash64 — integer-only, far cheaper
-    than 32 string hashes per shingle)."""
-
-    def hash_i(i: int) -> Column:
-        # single-arg lambda: a two-arg lambda would receive the array index
-        return F.array_min(F.transform(hashes, lambda h: F.xxhash64(h, F.lit(i))))
-
-    return [hash_i(i) for i in range(N_HASHES)]
-
 
 def shingle_base(docs: DataFrame, k: int = 5) -> DataFrame:
     """(doc_id, sh, hs): distinct word k-shingles + their 64-bit hashes,
-    `persist()`ed — THE shared substrate of the dedup family. MinHash,
-    contamination (both forms) and any other shingle consumer read this one
-    cached frame, so a session computes the interpreted-HOF shingling once
-    per corpus, not once per query (Spark's cache manager keys on the
-    logical plan, so every caller building the same base hits the same
-    InMemoryRelation with column pruning).
+    `persist()`ed — the shared 5-shingle substrate of the contamination
+    (broadcast and indexed), contamination-fraction, containment and
+    incremental-dedup queries. They read this one cached frame, so a session
+    computes the interpreted-HOF shingling once per corpus, not once per
+    query (Spark's cache manager keys on the logical plan, so every caller
+    building the same base hits the same InMemoryRelation with column
+    pruning). MinHash does not read it: its pipeline hashes 3-shingles with
+    32-bit md5 prefixes (``_mh_exact_base``) so DuckDB can replay it.
 
     `spread()` first: shingling is compute-dense, and byte-sized parquet
     splits (row-group-bounded) under-parallelize it. The persist also stops
@@ -263,161 +250,6 @@ def shingle_base(docs: DataFrame, k: int = 5) -> DataFrame:
         .withColumn("hs", F.transform(F.col("sh"), lambda s: F.xxhash64(s)))
         .persist()
     )
-
-
-def minhash_signatures(docs: DataFrame, k: int = 5) -> DataFrame:
-    """(doc_id, shingles, sig_0..sig_31) for non-empty documents, over the
-    shared persisted `shingle_base` (consumed three times downstream: band
-    explode + both sides of the verify join)."""
-    base = shingle_base(docs, k)
-    sig = _minhash_signature(F.col("hs"))
-    return base.select("doc_id", "sh", *[c.alias(f"sig_{i}") for i, c in enumerate(sig)])
-
-
-def _band_structs() -> Column:
-    return F.array(*[
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.xxhash64(*[F.col(f"sig_{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]).alias("band_hash"),
-        )
-        for b in range(N_BANDS)
-    ])
-
-
-def minhash_candidates(sigs: DataFrame, min_est: float = 0.0) -> DataFrame:
-    """LSH banding: docs agreeing on all rows of any band become candidate
-    pairs. Shuffles on (band_id, band_hash); never materializes n^2.
-
-    ``min_est`` > 0 enables the signature screen AT the band join: the
-    packed 32-hash signature rides through the band explode (fixed 256 B
-    per band row), so estimated Jaccard — fraction of minhashes agreeing,
-    the MinHash estimator itself — is computed directly on the join output
-    with NO re-join against the signature table. Pairs estimating below
-    ``min_est`` are dropped before the shingle-array verify ever sees them;
-    ``min_est=0`` recovers the exact verify-every-band-collision behavior.
-    Rows-only (seeded xxhash64 minhashes); the engine-verified twin of the
-    whole pipeline is ``x1_minhash_exact``.
-
-    Scale note: carrying the signature widens the band-explode shuffle by
-    ~10x (24 B -> ~280 B/row), but deletes two whole shuffles of the
-    signature table that the round-3 screen re-join cost — and the explode
-    shuffle is map-side-combinable narrow data with perfectly uniform keys
-    (band hashes), so it scales linearly where the re-join's pair-keyed
-    shuffles were the skew risk."""
-    sigv = F.array(*[F.col(f"sig_{i}") for i in range(N_HASHES)])
-    exploded = sigs.select(
-        "doc_id", sigv.alias("sigv"), F.explode(_band_structs()).alias("band")
-    ).select(
-        "doc_id", "sigv",
-        F.col("band.band_id").alias("band_id"),
-        F.col("band.band_hash").alias("band_hash"),
-    )
-    left = exploded.alias("l")
-    right = exploded.alias("r")
-    joined = left.join(
-        right,
-        (F.col("l.band_id") == F.col("r.band_id"))
-        & (F.col("l.band_hash") == F.col("r.band_hash"))
-        & (F.col("l.doc_id") < F.col("r.doc_id")),
-    )
-    if min_est > 0.0:
-        # MinHash estimate from the carried signatures: 32-element zip, no
-        # shuffle — runs on the (already small) band-collision rows only
-        agree = F.aggregate(
-            F.zip_with(F.col("l.sigv"), F.col("r.sigv"),
-                       lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-        joined = joined.filter(agree >= F.lit(int(round(min_est * N_HASHES))))
-    return (
-        joined
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
-def exact_jaccard(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
-    """Verify candidates with exact Jaccard over the shingle sets."""
-    a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter.cast("double") / union, 6).alias("jaccard"),
-        )
-    )
-
-
-def screen_candidates(pairs: DataFrame, sigs: DataFrame, min_est: float) -> DataFrame:
-    """Signature-screen an EXTERNALLY-built pair list before exact verify.
-
-    The hot path (`x1_minhash_neardup`) no longer uses this — the screen is
-    fused into `minhash_candidates(min_est=...)`, which reads the carried
-    signatures at the band join instead of re-joining the signature table
-    twice. This standalone form remains for pair lists that arrive without
-    signatures attached (e.g. pairs loaded from a prior run's output).
-
-    Estimated Jaccard = fraction of the 32 already-computed minhashes that
-    agree (the MinHash estimator itself). The screen join ships only the
-    fixed-width signature columns (32 x 8 B per side) — never the variable-
-    length shingle arrays — so the verify path's shuffle is bounded by
-    candidate count, not document length. Only pairs with estimate >=
-    ``min_est`` proceed to the exact set-intersection verify.
-
-    ``min_est`` must sit safely below the final exact threshold: with 32
-    hashes the estimator's sigma at J=0.5 is sqrt(.5*.5/32) ~= 0.088, so a
-    screen at threshold - 3*sigma keeps P(drop a true positive) ~1e-3 per
-    pair (binomial P(X<=7 | n=32, p=.5) = 0.00105, falling fast above J=0.5) while pruning the (far more numerous) low-similarity band
-    collisions before their shingle sets are ever shuffled.
-    """
-    sig_cols = [f"sig_{i}" for i in range(N_HASHES)]
-    a = sigs.select(F.col("doc_id").alias("doc_a"),
-                    *[F.col(c).alias(f"a_{c}") for c in sig_cols])
-    b = sigs.select(F.col("doc_id").alias("doc_b"),
-                    *[F.col(c).alias(f"b_{c}") for c in sig_cols])
-    agree = reduce(
-        lambda acc, c: acc + (F.col(f"a_{c}") == F.col(f"b_{c}")).cast("int"),
-        sig_cols,
-        F.lit(0),
-    )
-    return (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", (agree / F.lit(N_HASHES)).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= min_est)
-        .select("doc_a", "doc_b")
-    )
-
-
-def x1_minhash_neardup(spark: SparkSession, sf_dir: str,
-                       min_est: float = 0.25) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline; pairs with Jaccard >= 0.5.
-
-    Verify is two-stage: the signature screen runs AT the band join
-    (minhash_candidates carries the packed signature through the explode,
-    so est >= 0.25 ~= threshold - 3*sigma costs zero extra joins), then
-    exact Jaccard runs only on survivors — shingle arrays are shuffled for
-    screened pairs only, never for every band collision. The screen is
-    probabilistic (P(drop a true J=0.5 pair) ~1e-3 per pair, vanishing
-    above); pass ``min_est=0`` to verify every band collision exactly.
-    Rows-only check (hash-seed-specific); semantics pinned in tests.
-
-    The pair frame is a persisted session memo (r13-opt): the SAME
-    band-join + verify frame is the pair substrate of x1_dup_clusters."""
-    def build():
-        sigs = minhash_signatures(load_table(spark, sf_dir, "documents"))
-        cands = minhash_candidates(sigs, min_est=min_est)
-        return exact_jaccard(cands, sigs).filter(
-            F.col("jaccard") >= 0.5
-        ).persist()
-
-    return memo.get(spark, "minhash_neardup", (sf_dir, min_est), build)
 
 
 # deterministic overflow-safe remix constants for the ORACLED MinHash twin:
@@ -444,19 +276,18 @@ def _mh_exact_consts() -> list[tuple[int, int]]:
 
 
 def x1_minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLED MinHash-LSH near-dup: the same signature -> banding ->
-    band-bucket join -> exact-Jaccard verify pipeline as
-    ``x1_minhash_neardup``, with every stage engine-reproducible — 32-bit
-    md5-prefix shingle hashes, 32 xor-multiply remixes ((h XOR b_k) * a_k
-    mod 2^32, overflow-safe odd constants), 8 bands of 4 signature values joined on
-    the RAW 4-tuple (no bucket hash needed), and the exact Jaccard on hash
-    arrays. DuckDB replays the identical integer arithmetic, so the last
-    big rows-only family (seeded MinHash) gains a hash-checked twin, the
-    same graduation x1_dup_clusters_exact and x1_simhash_exact made.
+    """MinHash-LSH near-dup pairs with Jaccard >= 0.5, oracled: signature ->
+    banding -> band-bucket join -> exact-Jaccard verify, with every stage
+    engine-reproducible — 32-bit md5-prefix shingle hashes, 32 xor-multiply
+    remixes ((h XOR b_k) * a_k mod 2^32, overflow-safe odd constants), 8
+    bands of 4 signature values joined on the RAW 4-tuple (no bucket hash
+    needed), and the exact Jaccard on hash arrays. DuckDB replays the
+    identical integer arithmetic. ``x1_minhash_neardup`` is this same
+    function under its original contract name.
 
-    Plan shape matches the production form: the band join shuffles on
-    (band, 4 ints); candidate verification touches band collisions only,
-    never n^2; the verify join ships 8-byte hash arrays."""
+    The band join shuffles on (band, 4 ints); candidate verification
+    touches band collisions only, never n^2; the verify join ships 8-byte
+    hash arrays."""
     return minhash_corpus_pairs(spark, sf_dir)
 
 
@@ -613,13 +444,10 @@ def minhash_corpus_pairs(spark: SparkSession, sf_dir: str,
 def x1_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard for every LSH candidate pair (NO threshold) —
     the similarity histogram a dedup-tuning run inspects to pick its
-    cutoff. Round 7: recomposed over the DETERMINISTIC candidate generator
-    (``minhash_exact_pairs`` with ``min_jaccard=None`` — 32-bit md5-prefix
-    hashes, xor-multiply remixes, 8x4 banding), graduating the query from
-    rows-only (the old candidates came from seeded xxhash64 minhashes,
-    whose pipeline remains pinned as ``x1_minhash_neardup``) to a full
-    value-hash oracle: DuckDB replays candidate generation AND the exact
-    hash-set Jaccard integer-for-integer.
+    cutoff. The candidates are the x1_minhash_exact ones
+    (``minhash_corpus_pairs`` with ``min_jaccard=None`` — 32-bit md5-prefix
+    hashes, xor-multiply remixes, 8x4 banding), so DuckDB replays candidate
+    generation AND the exact hash-set Jaccard integer-for-integer.
 
     Plan shape is the production one: band 4-tuple join (never n^2), then
     the bounded verify join over band collisions only."""
@@ -1185,98 +1013,31 @@ def _allpairs_impl(spark: SparkSession, sf_dir: str, tau: float) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document: explode tokens, hash each (xxhash64),
-    per-bit signed vote, reassemble. One explode + one groupBy with 64
-    codegen'd conditional sums — no Python."""
-    toks = spread(docs.select(id_col, text_col)).select(
-        id_col,
-        F.explode(F.split(F.lower(normalize_ws(F.col(text_col))), " ")).alias("tok"),
-    ).withColumn("h", F.xxhash64("tok"))
-    votes = toks.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), k).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"bit_{k}")
-            for k in range(64)
-        ]
-    )
-    sim = reduce(
-        lambda acc, k: acc + F.when(F.col(f"bit_{k}") > 0, F.lit(1).cast("long") * (2 ** k if k < 63 else -(2 ** 63))).otherwise(0),
-        range(64),
-        F.lit(0).cast("long"),
-    )
-    return votes.select(id_col, sim.alias("simhash"))
-
-
-def simhash_neardup(sims: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs by Hamming distance: band the 64-bit hash into 4
-    16-bit chunks (pigeonhole guarantees hamming<=3 pairs collide on one),
-    join on chunk equality, verify with bit_count(xor)."""
-    chunks = F.array(*[
-        F.struct(
-            F.lit(j).alias("chunk_id"),
-            F.shiftrightunsigned(F.col("simhash"), 16 * j).bitwiseAND(F.lit(0xFFFF)).alias("chunk_val"),
-        )
-        for j in range(4)
-    ])
-    exploded = sims.select("doc_id", "simhash", F.explode(chunks).alias("c")).select(
-        "doc_id", "simhash", F.col("c.chunk_id").alias("chunk_id"), F.col("c.chunk_val").alias("chunk_val")
-    )
-    l, r = exploded.alias("l"), exploded.alias("r")
-    pairs = (
-        l.join(
-            r,
-            (F.col("l.chunk_id") == F.col("r.chunk_id"))
-            & (F.col("l.chunk_val") == F.col("r.chunk_val"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))).alias("hamming"),
-        )
-        .distinct()
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
-
-
-def x1_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (hamming <= 3). Rows-only check (xxhash64
-    token hashes are Spark-seeded); the ORACLED twin below reproduces the
-    whole fingerprint in DuckDB."""
-    docs = load_table(spark, sf_dir, "documents")
-    return simhash_neardup(simhash(docs))
-
-
 SIMHASH_EXACT_BITS = 32
 
 
 def x1_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLED SimHash: the same signed-bit-vote fingerprint + pigeonhole
-    banding + hamming verify as ``x1_simhash_neardup``, built on 32-bit
-    md5-PREFIX token hashes instead of seeded xxhash64 — every bit of the
-    fingerprint, every band bucket, and every hamming distance is plain
-    integer arithmetic DuckDB reproduces, so the whole near-dup pipeline
-    graduates from rows-only to hash-checked (the discipline that turned
-    dup clustering into x1_dup_clusters_exact).
+    """SimHash near-dup pairs (hamming <= 3), oracled: a signed-bit-vote
+    fingerprint + pigeonhole banding + hamming verify built on 32-bit
+    md5-PREFIX token hashes — every bit of the fingerprint, every band
+    bucket, and every hamming distance is plain integer arithmetic DuckDB
+    reproduces. ``x1_simhash_neardup`` is this same function under its
+    original contract name.
 
-    Shape is identical to the production form: one token explode -> 32
-    codegen'd conditional sums per doc -> fingerprint reassembly -> 4x8-bit
-    chunk banding (pigeonhole: hamming <= 3 pairs share a chunk) ->
-    bit_count(xor) verify on collisions only. 32 bits halve the
-    fingerprint's resolution vs the 64-bit form — acceptable for the
-    oracle twin; the production query keeps 64.
+    Shape: one token explode -> 32 codegen'd conditional sums per doc ->
+    fingerprint reassembly -> 4x8-bit chunk banding (pigeonhole: hamming
+    <= 3 pairs share a chunk) -> bit_count(xor) verify on collisions only.
 
     The pair frame is a persisted session memo (r13-opt): it is consumed
     by BOTH x1_simhash_exact and x1_simhash_recall_eval, which re-ran the
     token explode + 32 conditional sums + banding self-join per call."""
-    return memo.get(spark, "simhash_exact", (sf_dir,),
-                    lambda: _simhash_exact_pairs(spark, sf_dir))
+    return memo.get(spark, "simhash_exact", (sf_dir,), lambda: simhash_exact_pairs(
+        load_table(spark, sf_dir, "documents")).persist())
 
 
-def _simhash_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+def simhash_exact_pairs(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming) for every pair of (doc_id, text) rows whose
+    32-bit SimHash fingerprints differ in at most 3 bits."""
     toks = spread(docs).select(
         "doc_id",
         F.explode(F.split(F.lower(normalize_ws(F.col("text"))), " ")).alias("tok"),
@@ -1329,7 +1090,7 @@ def _simhash_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).cast("int")
     return pairs.select("doc_a", "doc_b", ham.alias("hamming")).filter(
         F.col("hamming") <= 3
-    ).persist()
+    )
 
 
 def x1_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1781,7 +1542,7 @@ QUERIES = {
     "x1_dedup_stats": x1_dedup_stats,
     "x1_dedup_keep_best": x1_dedup_keep_best,
     "x1_prefix_dup_groups": x1_prefix_dup_groups,
-    "x1_minhash_neardup": x1_minhash_neardup,
+    "x1_minhash_neardup": x1_minhash_exact,
     "x1_ngram_jaccard": x1_ngram_jaccard,
     "x1_cdc_chunks": x1_cdc_chunks,
     "x1_allpairs_prefix": x1_allpairs_prefix,
@@ -1789,18 +1550,17 @@ QUERIES = {
     "x1_winnowing_arrow": x1_winnowing_arrow,
     "x1_contamination_bloom": x1_contamination_bloom,
     "x1_source_overlap": x1_source_overlap,
-    "x1_simhash_neardup": x1_simhash_neardup,
+    "x1_simhash_neardup": x1_simhash_exact,
     "x1_simhash_exact": x1_simhash_exact,
     "x1_minhash_exact": x1_minhash_exact,
 }
 
 _FP_DUCK = "md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))"
 
-ORACLES = {
-    # generated 32-bit SimHash twin: md5-prefix token hashes, the same
-    # signed votes / fingerprint reassembly / 4x8-bit banding / hamming
-    # verify as the Spark plan — all plain integer arithmetic
-    "x1_simhash_exact": """
+# 32-bit SimHash: md5-prefix token hashes, the same signed votes /
+# fingerprint reassembly / 4x8-bit banding / hamming verify as the Spark
+# plan — all plain integer arithmetic
+SIMHASH_ORACLE_SQL = """
         WITH tk AS (
             SELECT doc_id,
                    unnest(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) AS tok
@@ -1859,7 +1619,11 @@ ORACLES = {
                CAST(bit_count(xor(sa, sb)) AS INT) AS hamming
         FROM p
         WHERE bit_count(xor(sa, sb)) <= 3
-    """,
+    """
+
+ORACLES = {
+    "x1_simhash_exact": SIMHASH_ORACLE_SQL,
+    "x1_simhash_neardup": SIMHASH_ORACLE_SQL,
     # same 8-gram lattice as x1_repeated_passages; keeper occurrence picked
     # by the identical doc_id*1e6+start integer encoding; NOT EXISTS is the
     # anti-join; string_agg ORDER BY pos is the per-doc reassembly
@@ -2099,9 +1863,6 @@ ORACLES = {
                count(*) AS copies, min(doc_id) AS keeper_id
         FROM documents GROUP BY 1 HAVING count(*) > 1
     """,
-    # minhash / simhash seeded forms: rows-only by design (seeded-hash
-    # specific); their deterministic twins x1_minhash_exact /
-    # x1_simhash_exact / x1_ngram_jaccard are fully oracled below
     "x1_embedding_neardup": """
         WITH e AS (
             SELECT vec_id, vec_id // 50 AS block,
@@ -2200,6 +1961,7 @@ def _minhash_exact_oracle_sql(src: str = "documents",
 
 
 ORACLES["x1_minhash_exact"] = _minhash_exact_oracle_sql()
+ORACLES["x1_minhash_neardup"] = ORACLES["x1_minhash_exact"]
 ORACLES["x1_ngram_jaccard"] = _minhash_exact_oracle_sql(min_jaccard=None)
 
 # content-defined chunking: same boundary gear (32-bit md5-prefix mod

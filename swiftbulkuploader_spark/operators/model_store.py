@@ -95,6 +95,10 @@ def _scan_fingerprint(spark: SparkSession, sf_dir: str, table: str) -> str:
 
 
 def _manifest_matches(spark: SparkSession, mdir: str, fingerprint: str) -> bool:
+    """True iff the artifact at `mdir` (a model here, or an ANN index)
+    carries a manifest whose fingerprint equals the current data's.
+    Missing manifest (old or partial artifact) is a mismatch; real IO
+    errors propagate (state_io discipline)."""
     from swiftbulkuploader_spark.streaming.state_io import state_path_exists
 
     mpath = os.path.join(mdir, "manifest")
@@ -104,9 +108,12 @@ def _manifest_matches(spark: SparkSession, mdir: str, fingerprint: str) -> bool:
     return len(rows) == 1 and rows[0]["fingerprint"] == fingerprint
 
 
-def _write_manifest(spark: SparkSession, mdir: str, fingerprint: str) -> None:
+def _write_manifest(spark: SparkSession, mdir: str, fingerprint: str,
+                    version: int) -> None:
+    """Publish the artifact at `mdir`: written LAST, so a partially
+    written artifact never matches and is retrained, not served."""
     spark.createDataFrame(
-        [(fingerprint, MODEL_FORMAT_VERSION)],
+        [(fingerprint, version)],
         "fingerprint string, format_version int",
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(mdir, "manifest")
@@ -130,14 +137,20 @@ def save_bpe(spark: SparkSession, sf_dir: str, mdir: str) -> None:
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(mdir, "merges")
     )
-    _write_manifest(spark, mdir, table_fingerprint(spark, sf_dir, "documents"))
+    _write_manifest(spark, mdir, table_fingerprint(spark, sf_dir, "documents"),
+                    MODEL_FORMAT_VERSION)
 
 
 def load_bpe(spark: SparkSession, mdir: str) -> list[tuple]:
-    """Bounded collect: BPE_MERGES rows, rank order restored."""
-    rows = read_parquet(spark, os.path.join(mdir, "merges")) \
-        .orderBy("rank").collect()
-    return [(r["rank"], r["x"], r["y"], r["merged"], r["cnt"]) for r in rows]
+    """Bounded collect: BPE_MERGES rows, rank order restored. Loaded
+    models are session memos whose inputs are their artifact tables, so a
+    republished artifact is loaded again."""
+    def build():
+        rows = read_parquet(spark, os.path.join(mdir, "merges")) \
+            .orderBy("rank").collect()
+        return [(r["rank"], r["x"], r["y"], r["merged"], r["cnt"]) for r in rows]
+
+    return memo.get(spark, "bpe_artifact", (mdir,), build)
 
 
 def ensure_bpe(spark: SparkSession, sf_dir: str,
@@ -178,13 +191,17 @@ def save_quality_model(spark: SparkSession, sf_dir: str, mdir: str) -> None:
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(mdir, "weights")
     )
-    _write_manifest(spark, mdir, table_fingerprint(spark, sf_dir, "documents"))
+    _write_manifest(spark, mdir, table_fingerprint(spark, sf_dir, "documents"),
+                    MODEL_FORMAT_VERSION)
 
 
 def load_quality_model(spark: SparkSession, mdir: str) -> list[float]:
-    rows = read_parquet(spark, os.path.join(mdir, "weights")) \
-        .orderBy("j").collect()
-    return [float(r["w"]) for r in rows]
+    def build():
+        rows = read_parquet(spark, os.path.join(mdir, "weights")) \
+            .orderBy("j").collect()
+        return [float(r["w"]) for r in rows]
+
+    return memo.get(spark, "quality_artifact", (mdir,), build)
 
 
 def ensure_quality_model(spark: SparkSession, sf_dir: str,
@@ -227,20 +244,24 @@ def save_pca(spark: SparkSession, sf_dir: str, mdir: str) -> None:
         [(float(nrm), int(n))], "nrm double, n long",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(mdir, "stats"))
     _write_manifest(spark, mdir,
-                    table_fingerprint(spark, sf_dir, "embeddings"))
+                    table_fingerprint(spark, sf_dir, "embeddings"),
+                    MODEL_FORMAT_VERSION)
 
 
 def load_pca(spark: SparkSession,
              mdir: str) -> tuple[list[float], list[float], float, int]:
-    brows = read_parquet(spark, os.path.join(mdir, "basis")) \
-        .orderBy("pos").collect()  # bounded: one row per dimension
-    srow = read_parquet(spark, os.path.join(mdir, "stats")).collect()[0]
-    return (
-        [float(r["m"]) for r in brows],
-        [float(r["v"]) for r in brows],
-        float(srow["nrm"]),
-        int(srow["n"]),
-    )
+    def build():
+        brows = read_parquet(spark, os.path.join(mdir, "basis")) \
+            .orderBy("pos").collect()  # bounded: one row per dimension
+        srow = read_parquet(spark, os.path.join(mdir, "stats")).collect()[0]
+        return (
+            [float(r["m"]) for r in brows],
+            [float(r["v"]) for r in brows],
+            float(srow["nrm"]),
+            int(srow["n"]),
+        )
+
+    return memo.get(spark, "pca_artifact", (mdir,), build)
 
 
 def ensure_pca(spark: SparkSession, sf_dir: str,

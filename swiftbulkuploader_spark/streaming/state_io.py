@@ -22,14 +22,18 @@ the batch against intact state.
 
 from __future__ import annotations
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 
 
 def _fs_path(spark: SparkSession, path: str):
     """(Hadoop FileSystem, Path) for `path`, resolved exactly like
-    spark.read would (local, HDFS, or an object store)."""
-    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
+    spark.read would (local, HDFS, or an object store). The Path class is
+    named in one Py4J call: walking ``_jvm.org.apache...`` costs a round
+    trip per package segment, on every fingerprint and state read."""
+    sc = spark.sparkContext
+    jpath = JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(path)
+    return jpath.getFileSystem(sc._jsc.hadoopConfiguration()), jpath
 
 
 def state_path_exists(spark: SparkSession, path: str) -> bool:

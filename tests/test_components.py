@@ -56,11 +56,7 @@ class TestDedupClusters:
 
     def test_end_to_end_with_minhash(self, spark):
         """Compose: corpus -> minhash pairs -> clusters."""
-        from swiftbulkuploader_spark.operators.dedup import (
-            exact_jaccard,
-            minhash_candidates,
-            minhash_signatures,
-        )
+        from swiftbulkuploader_spark.operators.dedup import minhash_exact_pairs
 
         base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
                 "lambda mu nu xi omicron pi rho sigma tau upsilon")
@@ -71,8 +67,7 @@ class TestDedupClusters:
                  "twenty twentyone twentytwo twentythree twentyfour twentyfive")],
             "doc_id: long, text: string",
         )
-        sigs = minhash_signatures(docs)
-        pairs = exact_jaccard(minhash_candidates(sigs), sigs).filter("jaccard >= 0.5")
+        pairs = minhash_exact_pairs(docs)
         rows = {r["doc_id"]: r for r in dedup_clusters(pairs).collect()}
         assert rows[0]["cluster_id"] == 0 and rows[0]["is_survivor"]
         assert rows[1]["cluster_id"] == 0 and not rows[1]["is_survivor"]

@@ -4,16 +4,19 @@ precision on known near-dups, SimHash hamming pairs, n-gram Jaccard values.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from swiftbulkuploader_spark.operators.dedup import (
-    exact_jaccard,
-    minhash_candidates,
-    minhash_signatures,
-    simhash,
-    simhash_neardup,
+    _mh_exact_bands,
+    _mh_exact_base,
+    minhash_exact_pairs,
+    simhash_exact_pairs,
 )
+
+from conftest import SF_SMOKE
 
 BASE = ("the quick brown fox jumps over the lazy dog and then runs far away "
         "into the deep green forest while the sun slowly sets behind hills")
@@ -33,48 +36,47 @@ def corpus(spark):
 
 class TestMinHash:
     def test_signatures_shape(self, spark, corpus):
-        sigs = minhash_signatures(corpus)
-        assert sigs.count() == 4
-        assert {c for c in sigs.columns if c.startswith("sig_")} == {f"sig_{i}" for i in range(32)}
+        bands = _mh_exact_bands(_mh_exact_base(corpus))
+        assert bands.columns == ["doc_id", "bj", "c0", "c1", "c2", "c3"]
+        per_doc = {r["doc_id"]: r["n"] for r in
+                   bands.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
+        assert per_doc == {0: 8, 1: 8, 2: 8, 3: 8}  # 8 bands of 4 per doc
 
     def test_exact_dup_is_found_with_jaccard_1(self, spark, corpus):
-        sigs = minhash_signatures(corpus)
-        pairs = exact_jaccard(minhash_candidates(sigs), sigs).collect()
+        pairs = minhash_exact_pairs(corpus, min_jaccard=None).collect()
         by_pair = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in pairs}
         assert by_pair.get((0, 2)) == 1.0
 
     def test_near_dup_found_far_not_paired(self, spark, corpus):
-        sigs = minhash_signatures(corpus)
-        pairs = exact_jaccard(minhash_candidates(sigs), sigs).collect()
+        pairs = minhash_exact_pairs(corpus, min_jaccard=None).collect()
         found = {(r["doc_a"], r["doc_b"]) for r in pairs}
         assert (0, 1) in found  # one-word edit shares most shingles
         assert not any(3 in p for p in found)  # unrelated text: no candidate
 
     def test_jaccard_value_sane_for_near_dup(self, spark, corpus):
-        sigs = minhash_signatures(corpus)
         pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-                 for r in exact_jaccard(minhash_candidates(sigs), sigs).collect()}
-        # one word changed in 23 -> ~5 of ~19 5-shingles differ
+                 for r in minhash_exact_pairs(corpus).collect()}
+        # one word changed in 23 -> 3 of 21 3-shingles differ
         assert 0.5 < pairs[(0, 1)] < 1.0
 
 
 class TestSimHash:
     def test_exact_dup_hamming_zero(self, spark, corpus):
-        sims = simhash(corpus)
-        vals = {r["doc_id"]: r["simhash"] for r in sims.collect()}
-        assert vals[0] == vals[2]
+        pairs = {(r["doc_a"], r["doc_b"]): r["hamming"]
+                 for r in simhash_exact_pairs(corpus).collect()}
+        assert pairs.get((0, 2)) == 0
 
     def test_near_dup_low_hamming_far_high(self, spark, corpus):
-        sims = simhash(corpus)
-        vals = {r["doc_id"]: r["simhash"] for r in sims.collect()}
-        ham = lambda a, b: bin((a ^ b) & (2**64 - 1)).count("1")
-        assert ham(vals[0], vals[1]) <= 10
-        assert ham(vals[0], vals[3]) > 10
+        pairs = {(r["doc_a"], r["doc_b"]): r["hamming"]
+                 for r in simhash_exact_pairs(corpus).collect()}
+        assert pairs.get((0, 1), 99) <= 3  # one-word edit: within 3 bits
+        assert not any(3 in p for p in pairs)  # far doc: never within 3
 
     def test_neardup_pairs(self, spark, corpus):
         pairs = {(r["doc_a"], r["doc_b"]): r["hamming"]
-                 for r in simhash_neardup(simhash(corpus), max_hamming=10).collect()}
+                 for r in simhash_exact_pairs(corpus).collect()}
         assert (0, 2) in pairs and pairs[(0, 2)] == 0
+        assert all(h <= 3 for h in pairs.values())
         assert not any(3 in p for p in pairs)
 
 
@@ -140,76 +142,6 @@ class TestContamination:
         assert got[0]["n_flagged"] >= 1
         assert got[1]["max_containment"] < 0.5  # distinct probe not flagged
         assert got[1]["n_flagged"] == 0
-
-
-class TestScreenedVerify:
-    """The signature screen (screen_candidates) must not change WHICH pairs
-    the threshold-filtered pipeline emits — it only prunes the shingle-array
-    shuffle down to plausible candidates."""
-
-    def test_screen_keeps_true_pairs(self, spark, corpus):
-        from swiftbulkuploader_spark.operators.dedup import screen_candidates
-
-        sigs = minhash_signatures(corpus)
-        cands = minhash_candidates(sigs)
-        screened = screen_candidates(cands, sigs, min_est=0.25)
-        full = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-                for r in exact_jaccard(cands, sigs).filter(F.col("jaccard") >= 0.5).collect()}
-        kept = {(r["doc_a"], r["doc_b"]): r["jaccard"]
-                for r in exact_jaccard(screened, sigs).filter(F.col("jaccard") >= 0.5).collect()}
-        assert kept == full and (0, 2) in kept  # exact dup survives the screen
-
-    def test_screen_drops_low_similarity(self, spark, corpus):
-        from swiftbulkuploader_spark.operators.dedup import screen_candidates
-
-        sigs = minhash_signatures(corpus)
-        # a fabricated candidate pair between unrelated docs (0, 3): the
-        # screen must reject it without ever touching shingle arrays
-        fake = spark.createDataFrame([(0, 3)], "doc_a: long, doc_b: long")
-        assert screen_candidates(fake, sigs, min_est=0.25).count() == 0
-
-    def test_fused_screen_matches_standalone(self, spark, corpus):
-        """minhash_candidates(min_est=x) (screen fused at the band join)
-        must emit exactly the pairs screen_candidates keeps from
-        minhash_candidates(min_est=0) — same estimator, same cutoff."""
-        from swiftbulkuploader_spark.operators.dedup import screen_candidates
-
-        sigs = minhash_signatures(corpus)
-        unscreened = minhash_candidates(sigs)
-        standalone = {(r["doc_a"], r["doc_b"])
-                      for r in screen_candidates(unscreened, sigs, min_est=0.25).collect()}
-        fused = {(r["doc_a"], r["doc_b"])
-                 for r in minhash_candidates(sigs, min_est=0.25).collect()}
-        assert fused == standalone
-
-    def test_screen_false_negative_rate_at_borderline_jaccard(self, spark):
-        """Quantify the screen's false-negative rate right AT the decision
-        boundary (ADVICE r3): 60 crafted pairs engineered to land near
-        J=0.5 (28 of 40 words shared -> ~24 of ~48 shingles). Within the
-        band-collision candidate set (banding recall factored out), the
-        screened pipeline must retain >=95% of the true J>=0.5 pairs —
-        the analytic P(drop) at J=0.5 is ~1e-3 per pair, so the expected
-        miss count over ~tens of pairs is ~0. Deterministic: xxhash64 is
-        unseeded, so this measures the screen, not RNG luck."""
-        rows = []
-        for i in range(60):
-            shared = " ".join(f"p{i}s{j}" for j in range(28))
-            a = shared + " " + " ".join(f"p{i}a{j}" for j in range(12))
-            b = shared + " " + " ".join(f"p{i}b{j}" for j in range(12))
-            rows.append((2 * i, a))
-            rows.append((2 * i + 1, b))
-        docs = spark.createDataFrame(rows, "doc_id: long, text: string")
-        sigs = minhash_signatures(docs)
-        exact = {(r["doc_a"], r["doc_b"])
-                 for r in exact_jaccard(minhash_candidates(sigs), sigs)
-                 .filter(F.col("jaccard") >= 0.5).collect()}
-        screened = {(r["doc_a"], r["doc_b"])
-                    for r in exact_jaccard(minhash_candidates(sigs, min_est=0.25), sigs)
-                    .filter(F.col("jaccard") >= 0.5).collect()}
-        assert screened <= exact
-        assert len(exact) >= 10  # the corpus actually produced borderline pairs
-        miss_rate = 1 - len(screened) / len(exact)
-        assert miss_rate <= 0.05, (len(exact), len(screened))
 
 
 class TestContaminationIndexed:
@@ -448,6 +380,15 @@ class TestOracledTwins:
                for r in x1_simhash_exact(spark, str(tmp_path)).collect()}
         assert got.get((0, 2)) == 0          # identical text: hamming 0
         assert not any(3 in p for p in got)  # unrelated doc unpaired
+
+    def test_neardup_names_serve_the_oracled_pipelines(self, spark):
+        from swiftbulkuploader_spark import registry
+
+        sf = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+        for name in ("x1_minhash", "x1_simhash"):
+            neardup = registry.QUERIES[f"{name}_neardup"](spark, sf).collect()
+            exact = registry.QUERIES[f"{name}_exact"](spark, sf).collect()
+            assert neardup and sorted(neardup) == sorted(exact), name
 
 
 def test_contamination_bloom_no_false_negatives(spark):

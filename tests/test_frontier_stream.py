@@ -150,3 +150,17 @@ class TestFrontierAdmission:
         spark.range(3).write.parquet(live)
         assert state_path_exists(spark, live)
         assert read_state_or_none(spark, live).count() == 3
+
+    def test_fs_path_resolves_like_spark_read(self, spark, tmp_path):
+        from urllib.parse import urlparse
+
+        from swiftbulkuploader_spark.streaming.state_io import _fs_path
+
+        local = str(tmp_path / "t")
+        spark.range(3).write.parquet(local)
+        read_scheme = urlparse(spark.read.parquet(local).inputFiles()[0]).scheme
+        for path in (local, "file:" + local):
+            fs, jpath = _fs_path(spark, path)
+            assert jpath.toString() == path
+            assert fs.getUri().getScheme() == read_scheme == "file"
+            assert fs.exists(jpath)

@@ -173,9 +173,8 @@ def _jobs_during(spark, fn, group):
 
 def test_warm_artifact_serve_reads_no_schema(spark):
     """The artifact tables are read with their memoized schemas: a warm
-    build of x2_ivf_pq_from_artifact runs only the jobs of its bounded
-    collects (manifest, centroids, codebooks: 7), where each of its five
-    schema-less reads added a footer-reading inference job (12 in all)."""
+    build of x2_ivf_pq_from_artifact runs no footer-reading inference job,
+    where each of its five schema-less reads used to add one."""
     from swiftbulkuploader_spark.operators.ann_index import (
         x2_ivf_pq_from_artifact,
     )
@@ -199,3 +198,42 @@ def test_partitioned_assignments_match_an_inferring_read(spark, tmp_path):
     fresh = spark.read.parquet(os.path.join(path, "assignments"))
     assert stored.dtypes == fresh.dtypes
     assert _rows(stored) == _rows(fresh)
+
+
+def test_warm_artifact_builds_skip_the_artifact_collects(spark):
+    """A loaded index or model is a session memo: from the second build on,
+    an artifact-backed query runs no job for the centroid, codebook,
+    merge or basis collects. Before, the third build at sf0.01 fired 7 /
+    5 / 4 jobs."""
+    from swiftbulkuploader_spark.operators.ann_index import (
+        x2_ivf_pq_from_artifact,
+    )
+    from swiftbulkuploader_spark.operators.model_store import (
+        x2_pca_project_from_artifact,
+        x3_bpe_encode_from_artifact,
+    )
+
+    sf = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    for query, before in ((x2_ivf_pq_from_artifact, 7),
+                          (x2_pca_project_from_artifact, 5),
+                          (x3_bpe_encode_from_artifact, 4)):
+        query(spark, sf)
+        query(spark, sf)
+        jobs = _jobs_during(spark, lambda: query(spark, sf),
+                            f"memo-third-{query.__name__}")
+        assert len(jobs) < before, (query.__name__, len(jobs))
+
+
+def test_rewritten_centroids_are_loaded_again(spark, tmp_path):
+    from swiftbulkuploader_spark.operators.ann_index import (
+        ensure_index,
+        load_index,
+    )
+
+    path = ensure_index(spark, SF_SMOKE, str(tmp_path / "index"))
+    old = load_index(spark, path).centroids
+    new = [[x + 1.0 for x in c] for c in old]
+    spark.createDataFrame(
+        list(enumerate(new)), "cid int, cv array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
+    assert load_index(spark, path).centroids == new

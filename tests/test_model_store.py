@@ -141,7 +141,8 @@ class TestModelStore:
                 _os.path.join(mdir_, "merges"))
             model_store._write_manifest(
                 spark_, mdir_,
-                model_store.table_fingerprint(spark_, sf_dir_, "documents"))
+                model_store.table_fingerprint(spark_, sf_dir_, "documents"),
+                model_store.MODEL_FORMAT_VERSION)
 
         monkeypatch.setattr(model_store, "save_bpe", fake_save)
         model_store.ensure_bpe(spark, sfd, mroot)

@@ -5,6 +5,7 @@ that make these queries viable at 100 TB must not silently regress.
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -309,17 +310,15 @@ class TestRound3PlanShapes:
             or ("BroadcastHashJoin" in plan)
 
     def test_minhash_verify_screens_before_shingle_join(self, spark):
-        """Round 4: the signature screen is FUSED into the band join — the
-        packed signature array (sigv) rides the explode and the agreement
-        count (aggregate over zip_with equality) sits in the band join's
-        own condition with the integer threshold (0.25 * 32 = 8), so no
-        re-join of the signature table exists anywhere in the plan."""
+        """LSH banding screens candidates before the hash-array verify
+        join: the band join is an equi-join on the band id and its four
+        signature values, never a cartesian or nested-loop pairing."""
         plan = _plan(registry.QUERIES["x1_minhash_neardup"](spark, SF))
-        assert "sigv" in plan
-        assert "aggregate(zip_with(sigv" in plan  # screen inside the join cond
-        assert ">= 8)" in plan                    # min_est * N_HASHES
-        # the old screen's tell-tale renamed sig columns must be gone
-        assert "a_sig_0" not in plan and "b_sig_31" not in plan
+        assert "BroadcastNestedLoop" not in plan
+        assert "CartesianProduct" not in plan
+        keys = [[k.split("#")[0].strip() for k in ks.split(",")]
+                for ks in re.findall(r"Left keys \[\d+\]: \[([^\]]*)\]", plan)]
+        assert ["bj", "c0", "c1", "c2", "c3"] in keys, keys
 
     def test_zscore_native_has_no_python_stage(self, spark):
         """The native window z-score must stay JVM-side end-to-end (its

@@ -85,11 +85,7 @@ class TestLongDocuments:
         documents without regex blowup or OOM."""
         import time
 
-        from swiftbulkuploader_spark.operators.dedup import (
-            exact_jaccard,
-            minhash_candidates,
-            minhash_signatures,
-        )
+        from swiftbulkuploader_spark.operators.dedup import minhash_exact_pairs
 
         words = ("lorem ipsum dolor sit amet consectetur adipiscing elit sed do "
                  "eiusmod tempor incididunt ut labore et dolore magna aliqua").split()
@@ -105,8 +101,7 @@ class TestLongDocuments:
             quality_score(F.col("text")).alias("q"),
             fingerprint(F.col("text")).alias("fp"),
         ).collect()
-        sigs = minhash_signatures(docs)
-        pairs = exact_jaccard(minhash_candidates(sigs), sigs).collect()
+        pairs = minhash_exact_pairs(docs).collect()
         dt = time.time() - t0
         by_id = {r["doc_id"]: r for r in stats}
         assert by_id[0]["toks"] == 15000
